@@ -645,326 +645,8 @@ def main() -> int:
                     "fast_floor_sec": FAST_FLOOR_SEC,
                     "fast_entry_reps": FAST_ENTRY_REPS,
                     "ab_notes": [
-                        "r19 (optimization round 1): no query semantics "
-                        "changed — every plan change re-verified ALL "
-                        "MATCH against the DuckDB oracle at sf0.01 "
-                        "(and sf0.001 with the fit-literal dir aligned) "
-                        "before commit. Structural deltas expected vs "
-                        "r18 floors: stream_dedup_tick one-pass staged "
-                        "signatures (5.71→4.3 builder A/B), "
-                        "emb_kmeans_cells cheap-predicate filter "
-                        "replacing the pushed-down isnotnull(cell) "
-                        "duplicate evaluation (5.36→~3.6), "
-                        "part_entity_resolution bounded levenshtein, "
-                        "docs_kmv_shingle_overlap sketch pinned once "
-                        "instead of 4 evaluations, dedup_components "
-                        "join-free convergence check "
-                        "(docs_dup_cluster_reps), bipartite edge build "
-                        "joined once (pagerank/walk chains), "
-                        "decontamination staged token arrays, "
-                        "preferSortMergeJoin=false + AQE SHJ threshold "
-                        "(session-wide, deployment-parameterized). "
-                        "Also r19: the fast-entry rep top-up now ALSO "
-                        "triggers on the previous committed artifact's "
-                        "floor (ADVICE r18 #1) — load-insensitive; adds "
-                        "reps only, methodology otherwise unchanged.",
-                        "r18 end-of-round container state: two "
-                        "same-code bench attempts read min-sums "
-                        "107.1 / 104.4. Attempt A caught an ambient "
-                        "wave mid-run (emb_ann_ivf_stored reps "
-                        "8.1/31.8/16.6 s at identical 16 tasks with "
-                        "task_time tracking wall 1:1 — the starvation "
-                        "signature; same entry read 1.90 s floor in "
-                        "attempt B, matching its r17 floor 1.96). "
-                        "Attempt B (committed) has every large entry "
-                        "at or below its r17 floor: etl_hashtag_tick "
-                        "5.91 (vs 6.90 r17 builder floor — the r18 "
-                        "watch item resolves: the tick floor "
-                        "reproduces on a quiet run), stream_dedup_tick "
-                        "7.12, decontamination ~2.0, ann_ivf 1.90. "
-                        "Like-for-like vs the r17 committed 107.0 "
-                        "min-sum: B reads 104.4 INCLUDING the ~+5.5 s "
-                        "structural rotation delta "
-                        "(graph_node2vec_embeddings_97q1 in, "
-                        "nation_customers_suppliers_full 0.3 s out), "
-                        "i.e. ~99 like-for-like — the walk-kernel "
-                        "path-accumulation rewrite (graph.py r18) "
-                        "bought graph_walk_embeddings 4.40->~2.9 and "
-                        "the bounded node2vec chain 7.23->5.50 at "
-                        "their floors.",
-                        "r18 watch-item adjudication (the r17 verdict's "
-                        "task #4), measured this round with per-rep "
-                        "work metrics on the quietest container state "
-                        "available: docs_decontamination floor read "
-                        "2.353 s / task_time 2358 ms / 139 tasks — the "
-                        "r16 2.34 floor reproduces EXACTLY, so the r17 "
-                        "builder 3.61 and driver 7.18 reads were "
-                        "ambient, not a regression; docs_pii_audit "
-                        "0.978 s (5 tasks) and docs_pack_first_fit "
-                        "0.89 s (7 tasks) likewise reproduce their r16 "
-                        "floors. etl_hashtag_tick could NOT be read "
-                        "quiet this session: isolated fresh-session "
-                        "reps gave 31.0/13.2/15.7/9.9 s at the same "
-                        "248 tasks with task_time tracking wall 1:1 "
-                        "while /proc/loadavg showed 4-7 ambient with "
-                        "nothing running in this container — the same "
-                        "latency-bound starvation signature as the r17 "
-                        "78-80 s reads (the tick chains ~50 tiny 1-task "
-                        "stages, the shape most sensitive to per-stage "
-                        "scheduling latency); code untouched since r11, "
-                        "work byte-identical.",
-                        "r18 structural delta: gate rotation promoted "
-                        "graph_node2vec_embeddings_97q1 (the bounded "
-                        "second-order embedding chain; warm floor cut "
-                        "7.23 -> 5.50 s at sf0.1 pre-promotion by the "
-                        "in-row walk-path accumulation in "
-                        "operators/graph.py — one materialization "
-                        "barrier instead of one per step) and rotated "
-                        "OUT nation_customers_suppliers_full (~0.3 s "
-                        "r17 median) — expect ~+5 s structural on the "
-                        "min-sum, on par with part_entity_resolution. "
-                        "The same graph.py change also applies to any "
-                        "node2vec consumer; graph_walk_embeddings "
-                        "(first-order) is untouched.",
-                        "r17 end-of-round container state: three "
-                        "same-code bench attempts read min-sums "
-                        "138.2 / 131.1 / 107.0 with the inflation "
-                        "landing on the tick phase in waves (ambient "
-                        "load 0.2-7.9 across the session). The rep "
-                        "metrics adjudicate it from inside the "
-                        "artifacts: etl_hashtag_tick work is "
-                        "byte-identical to BENCH_r16 (input 76,193,872 "
-                        "B, 248 tasks, same shuffle bytes every rep) "
-                        "while task_time_ms tracked wall 1:1 at "
-                        "5.2s (r16) vs 78-80s (attempt B) vs 7-8s "
-                        "(committed attempt C) — host CPU starvation, "
-                        "not a plan or code change. Attempt C's "
-                        "stream_dedup_tick floor (14.5 vs its 5.6 "
-                        "builder floor) still carries one load wave; "
-                        "its rep metrics show identical work too. "
-                        "Like-for-like vs the r16 committed 91.2 "
-                        "min-sum after the r17 structural delta "
-                        "(+0.8 docs_weighted_sample, -0.34 "
-                        "customer_rolling_30d_revenue), attempt C "
-                        "reads ~107 vs ~91.7 — a ~17% ambient "
-                        "residual concentrated in the dedup tick. "
-                        "emb_knn_join_recall (the r16 perf-weak "
-                        "entry) read floors 2.85-2.95 across all "
-                        "three attempts AND now carries per-rep work "
-                        "metrics (query_rep_metrics), closing the r16 "
-                        "adjudication gap.",
-                        "r17 structural delta: gate rotation promoted "
-                        "docs_weighted_sample (priority sampling; "
-                        "re-measured 0.13s warm at sf0.1 on a quiet "
-                        "container pre-promotion) and rotated OUT "
-                        "customer_rolling_30d_revenue (0.34s r16 "
-                        "median) — expect ~-0.2s structural, i.e. nil; "
-                        "any visible movement is noise, not the "
-                        "rotation.",
-                        "r17: graph_walk_embeddings output posexploded "
-                        "into (node, norm, d, value) scalar rows (the "
-                        "sole red r16 gate row — the driver's pandas "
-                        "canonicalization cannot hash array columns); "
-                        "same chain, same 50 nodes, 400 output rows, "
-                        "timing delta expected nil. Also r17: per-rep "
-                        "executor metric deltas now recorded for EVERY "
-                        "gate query (query_rep_metrics), not just ticks "
-                        "— the r16 emb_knn_join_recall 4.9x "
-                        "driver-vs-builder residual was unadjudicable "
-                        "because non-tick entries had no in-artifact "
-                        "work evidence.",
-                        "r16 end-of-round container state: four "
-                        "same-code bench attempts across the session "
-                        "read min-sums 106.5 / 101.6 / 91.2 s with "
-                        "max_noise 5.1-7.2, and the NEW tick_rep_metrics "
-                        "adjudicate the inflation from inside the "
-                        "artifact: identical per-rep work (input bytes, "
-                        "shuffle bytes, task counts, low GC) with "
-                        "task_time_ms tracking wall 1:1 at up to 5x "
-                        "spread = host CPU starvation, not a plan "
-                        "change. Like-for-like vs BENCH_r15 after the "
-                        "r16 structural delta (+3.3s walk-embeddings "
-                        "row in, -0.27s domain-cap out), the best "
-                        "attempt reads ~88.2 vs 84.6 min-sum (~4% "
-                        "ambient residual). The r15 watch-item ticks "
-                        "hit builder floors in the same runs: "
-                        "stream_dedup 5.63 (r15 builder floor 5.41), "
-                        "ann_query 2.73-3.15 (3.32), q1 1.41 (0.90 "
-                        "median-era floor), kmeans 1.39.",
-                        "r16 structural delta: gate promoted "
-                        "graph_walk_embeddings (walks -> cooc -> PPMI "
-                        "-> projection over the 1997Q1 subgraph; "
-                        "pre-measured ~3.8s warm at sf0.1 after pinning "
-                        "random_walks' distinct edge list, which cut "
-                        "the chain ~35% by running the upstream "
-                        "orders x lineitem join once instead of 3x) "
-                        "and rotated OUT docs_domain_cap (0.27s r15 "
-                        "median) — expect ~+3.5s of structural floor "
-                        "vs BENCH_r15. Also r16: every tick rep "
-                        "(including the untimed warm rep, flagged "
-                        "warm=1) now records executor-aggregate metric "
-                        "DELTAS (GC ms, JVM GC ms, shuffle read/write "
-                        "bytes, input bytes, task time, task count) in "
-                        "tick_rep_metrics, so a divergent driver "
-                        "artifact names the slow component instead of "
-                        "needing a same-code builder re-run.",
-                        "r15 SECOND structural delta (late-round "
-                        "rotation, the r14 pattern): gate promoted "
-                        "docs_bm25_indexed (~1.4s warm at sf0.1 — it "
-                        "builds the inverted index then answers the "
-                        "same terms as docs_bm25_topk; hashes "
-                        "identical to the scan face) and rotated OUT "
-                        "cube_returnflag_status (~0.52s r14 median) — "
-                        "expect ~+0.9s of structural floor on top of "
-                        "the first r15 delta below.",
-                        "r15 structural delta: gate promoted "
-                        "docs_kmv_shingle_overlap (warm floor ~3.2s at "
-                        "sf0.1 on 16 cpus after the r15 token-staging "
-                        "fix — it measured 10.1s before: the inline "
-                        "tokens() expression inside the 3-gram HOF "
-                        "lambda re-evaluated the split per element_at; "
-                        "staged into a column it is ~19x faster on the "
-                        "shingle scan, oracle hash unchanged) and "
-                        "rotated OUT sql_brand_revenue (~0.77s r14 "
-                        "median), so expect ~+2.5s of structural floor "
-                        "vs BENCH_r14. Also r15: every tick entry now "
-                        "runs one UNTIMED warm rep before its timed "
-                        "reps (the r14 stream_dedup_tick cold-state "
-                        "reading: driver artifact 11.48s flat x3 vs "
-                        "4.97s same-code warm — the first tick of a "
-                        "session pays JVM/stream warm-up that fresh "
-                        "per-rep state does not reset), so tick floors "
-                        "are warm-state by construction from r15 on.",
-                        "r14 second structural delta (late-round "
-                        "rotation): gate promoted events_hll_distinct "
-                        "(same-session warm floor ~0.93s at sf0.1 under "
-                        "suite contention, 5 reps 7.9/1.3/1.2/0.93/0.94) "
-                        "for orders_nested_lineitems (r14 floor 0.47s) — "
-                        "net ~ +0.5s of total; the nested row keeps full "
-                        "value parity in plans/extras_relational.py.",
-                        "r14 end-of-round stream_dedup_tick floor check: "
-                        "the committed run shows 15.3/11.1/7.9s — "
-                        "monotonically descending, still warming at rep "
-                        "3 — vs the r13 floor of 5.23s. A same-session "
-                        "standalone run of the identical tick function "
-                        "measured 8.3/6.0/5.3/6.0/4.9s — warm floor "
-                        "4.91s, AT/BELOW the r13 floor, so the in-bench "
-                        "number is cold-state, not a regression.",
-                        "r14 run-order change: llm_queries.py split into "
-                        "per-family modules (q_docs/q_emb/q_relational/"
-                        "q_docs_pipeline/q_graph/q_events), so queries() "
-                        "registration — and therefore bench run order — "
-                        "is now grouped by family instead of the "
-                        "historical interleaving. Zero plan/code change "
-                        "per query; per-entry warm-up neighbors shifted, "
-                        "so compare r14 floors to r13 knowing adjacency "
-                        "moved (samples_raw still diagnoses contention).",
-                        "r14 structural delta: gate rotation promoted "
-                        "events_dcm_quantiles for docs_ngram_jaccard "
-                        "(~2.7s floor). The dcm entry first measured "
-                        "~21s warm at sf0.1 — the b sequential descent "
-                        "jobs were pure job-launch overhead — so r14 "
-                        "rewrote the descent as ONE plan (per-group "
-                        "register map + nested-HOF aggregate) and made "
-                        "the sketch build's md5 work domain-bounded "
-                        "(two pre-collapses); same-session floors "
-                        "21.1 -> 7.1 -> 5.1 -> 3.5s (4 warm reps each "
-                        "step, registers bit-identical throughout, "
-                        "scale smoke base 29.7 -> 3.6s). Net rotation "
-                        "delta ~ +1s of total.",
-                        "r14 early-segment floor-drift A/B (VERDICT r13 "
-                        "what's-wrong #1: docs_token_stats min 0.50->1.20s "
-                        "plus 1.4-1.6x drift on docs_language_mix/"
-                        "part_scalar_functions/q1_pricing_summary on "
-                        "unchanged code): HEAD vs 4aaba6e (the two touched "
-                        "files git-checkout'd back), 6 warm reps each "
-                        "back-to-back in one session at sf0.1 — HEAD "
-                        "floors 0.668/0.669/0.284/0.782s vs 4aaba6e "
-                        "0.799/0.763/0.336/0.847s. HEAD is FASTER than "
-                        "the r12 code on every entry, and both sit far "
-                        "under the r13-recorded 1.20s, so the drift was "
-                        "container contention (r13's session carried "
-                        "noise ratios 2.4-3.9); perf-weak flag cleared. "
-                        "(Third instance of the pattern: pq_recall r12, "
-                        "pagerank_hubskew r12.)",
-                        "r13 structural delta: gate rotation promoted "
-                        "events_cm_frequency (~1.1s warm at sf0.1) and "
-                        "events_funnel_levels (~1.1s) for docs_simhash "
-                        "(~0.7s) and emb_ann_recall (~1.4s) — same-session "
-                        "warm floors, net ~+0.1s of total; any larger "
-                        "movement is noise, not the rotation.",
-                        "r12 emb_pq_recall floor-drift A/B (VERDICT r11 "
-                        "task #2: minima 1.79->2.50->3.59s across r8->r10->"
-                        "r11 while PQ code changed only in r9): HEAD vs "
-                        "pre-r9 similarity.py (f186c54, before the encode "
-                        "unroll guard b23e2da and argmin let-binding "
-                        "a2ac1a4), 5 warm reps each back-to-back in one "
-                        "session at sf0.1 — HEAD floor 2.265s, pre-r9 "
-                        "floor 2.768s. HEAD is FASTER than pre-r9, so the "
-                        "r9 changes are exonerated; both floors sit well "
-                        "under the r11-recorded 3.59, attributing the "
-                        "cross-round movement to container state, not "
-                        "code. (Same verdict pattern as pagerank_hubskew: "
-                        "r11's 7.45x re-measured at 1.33x at r12 start.)",
-                        "r11 structural delta: gate rotation promoted "
-                        "part_entity_resolution (~6.6s warm at sf0.1: 8.6M "
-                        "in-block levenshtein pairs + CC over the match "
-                        "graph) for customer_revenue_quartiles (~0.5s) — "
-                        "expect ~+6s of total vs r10 from coverage, not "
-                        "regression. The row's first cut blocked on last "
-                        "token alone (~2*10^8 pairs, 60s at sf0.1); the "
-                        "composite (last token, brand) block is the "
-                        "documented block-key scale lever applied.",
-                        "r11 etl_hashtag_tick A/B (the 'halve the tick' "
-                        "hypothesis): eager localCheckpoint of the enriched "
-                        "batch before the two upserts measured 7.5-7.9s "
-                        "floors vs 5.7-6.6 for the cache design — SLOWER: "
-                        "the bench tick runs on fresh tables, so upserts "
-                        "take the no-checkpoint create path and the old "
-                        "cache already made the lineage run once; the "
-                        "checkpoint only added a full-frame block write. "
-                        "Kept: cache moved AFTER enrichment (floor 5.2-6.0, "
-                        "~8% better — saves a duplicate broadcast-location "
-                        "join), plus MergeTable.upsert(assume_pinned=) for "
-                        "callers that fan one pinned batch into several "
-                        "tables on the merge path. Phase profile: warm "
-                        "sequential fetch+checkpoint 0.8s; the rest is "
-                        "extract UDTF + topics/labels enrichment + 2 "
-                        "writes — no reclaimable double-materialization "
-                        "remains.",
-                        "r9 argmin A/B: least(named_struct(score,idx)) chain vs "
-                        "transform-let-binding in ivf_cell — least form 2.74x "
-                        "slower at k=8 (1.786s vs 0.651s median, sf0.1) and "
-                        "3.36x at k=32 (8.811s vs 2.622s); janino fails to "
-                        "compile the struct chain (interpreted fallback). "
-                        "Transform-let-binding retained.",
-                        "r9 etl_hashtag_tick profile (re the r8 +17% drift): "
-                        "the users/posts MergeTable upserts carry ~70% of the "
-                        "tick (users upsert materializes the whole fetch->"
-                        "extract->join lineage into cache; posts upsert pays "
-                        "label/topic enrichment + write). Identical-code reps "
-                        "spanned 5.4s-14.6s on this container, so the r7->r8 "
-                        "median delta (4.44->5.23s, +0.8s) is below the noise "
-                        "floor; no plan change found on the tick path (none of "
-                        "hashtags/orchestrator/merge/fetch changed in r8). "
-                        "samples_raw/rep_started_at_sec now expose this per run.",
-                        "r10 end-of-round container state: three same-code "
-                        "bench re-runs later in the round measured totals of "
-                        "94.0s / 105.1s / 111.0s with max_noise_ratio 4.8-6.1 "
-                        "against the committed 87.3s (whose minima match the "
-                        "r9 floor) — ambient container degradation, uniform "
-                        "across unrelated entries. Compare per-entry MINIMA "
-                        "before reading any delta as a regression.",
-                        "r10 structural delta: three gate entries promoted "
-                        "(graph_pagerank_suppliers ~3.6s, docs_dup_cluster_reps "
-                        "~2.3s, docs_leakage_safe_split ~0.5s) for three "
-                        "rotated sub-second rows — expect ~+6s of total vs r9 "
-                        "from coverage, not regression. Tick medians this "
-                        "round (etl ~7s, stream_dedup ~7.4s) ran on a "
-                        "noisier container than r9 (identical-code HEAD reps "
-                        "spanned etl 6.5-16.4s across four sessions; "
-                        "MergeTable.read's r10 column-order select was A/B'd "
-                        "inert); minima remain at the r9 floor.",
+                        "round history: OPTIMIZATION_r19.md, OPTIMIZATION_r20.md, "
+                        "VERDICT.md and the git log",
                     ],
                     "total_median_sec": total,
                     "total_min_sec": total_min,

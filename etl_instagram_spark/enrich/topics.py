@@ -241,6 +241,7 @@ def _pipeline_cols(
 ) -> dict[str, Column]:
     from pyspark import SparkContext
 
+    langs = tuple(langs)  # callers may pass a list; the key must hash
     sc = SparkContext._active_spark_context
     ctx_key = (sc.applicationId, sc.startTime) if sc is not None else None
     key = (ctx_key, langs, k, min_pct, stem)

@@ -445,7 +445,7 @@ def gopher_flags(col: Column, **thresholds) -> dict[str, Column]:
     :data:`GOPHER_DEFAULTS` (the paper's Table A1 values). Every rule is
     a pure scan-stage column expression — array/regex arithmetic over
     one row, no UDF, no shuffle — and every expression has an exact
-    DuckDB mirror (plans/llm_queries ``docs_gopher_filter``), so the
+    DuckDB mirror (plans/q_docs_pipeline ``docs_gopher_filter``), so the
     whole rule set is value-checkable.
 
     Rules (paper Table A1): word count in [min_words, max_words]; mean

@@ -34,7 +34,7 @@ decimal cast is the escape hatch.) The new centroid
 ``(sum_units / 10^QUANT_DP) / n`` is computed in PYTHON on the driver
 from the exact integer, so a DuckDB replay that produces the same sums
 reproduces bit-identical centroids — certified end-to-end by the
-``emb_kmeans_cells`` gate oracle (plans/llm_queries.py), which re-runs
+``emb_kmeans_cells`` gate oracle (plans/q_emb.py), which re-runs
 init + every refinement iteration with DuckDB doing all the data math.
 """
 

@@ -657,7 +657,7 @@ def near_dedup_keep_best(
     (bounded groups); docs in no cluster bypass everything via one
     left-anti join on the id key. The cross-engine certification of
     the cluster/representative math is the gate row
-    ``docs_dup_cluster_reps`` (plans/llm_queries.py)."""
+    ``docs_dup_cluster_reps`` (plans/q_docs.py)."""
     clusters = duplicate_clusters(
         df, id_col, text_col, threshold, k, bands, shingle_words
     )

@@ -20,7 +20,7 @@ Spark-first shape, and why it scales:
   a text-similarity verify is used instead).
 - VERIFY stays in whole-stage codegen: ``levenshtein`` is a built-in
   in both Spark and DuckDB with identical integer semantics, which is
-  what makes the whole pipeline cross-engine certifiable (EXTRAS row
+  what makes the whole pipeline cross-engine certifiable (gate row
   ``part_entity_resolution``).
 - CLUSTERING is dedup.dedup_components over the verified pair list —
   O(duplicates) rows, O(graph diameter) key-equi rounds; the entity

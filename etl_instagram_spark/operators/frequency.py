@@ -27,7 +27,7 @@ Misra-Gries shape:
 The support threshold is an exact rational ``num/den`` and the filter is
 integer arithmetic, so the result is bit-identical across engines and
 partitionings — a SQL ``GROUP BY ... HAVING count(*)*den >= n*num``
-oracle replays it verbatim (plans/llm_queries.py `docs_heavy_hitters`).
+oracle replays it verbatim (plans/q_docs.py `docs_heavy_hitters`).
 
 Determinism: the candidate SET depends on partitioning (MG eviction
 order), but the RESULT does not — pass 2's exact filter removes every

@@ -31,7 +31,7 @@ Determinism note: the per-doc score is built as a FIXED-ORDER sum of
 per-term components (t1 + t2 + ...), not an aggregation over an
 unordered term frame — floating addition is order-sensitive, and the
 fixed order is what lets the DuckDB oracle replay scores bit-for-bit
-(plans/llm_queries ``docs_bm25_topk``).
+(plans/q_docs ``docs_bm25_topk``).
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # the corpus-wide token definition — ONE implementation (SQL mirror:
-# llm_queries.SQL_TOKS), shared with cleanup/dedup/packing
+# plans/q_shared.SQL_TOKS), shared with cleanup/dedup/packing
 from etl_instagram_spark.functions.text import tokens as _toks
 
 

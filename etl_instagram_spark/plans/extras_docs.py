@@ -1,24 +1,31 @@
-"""Documents-table rows of the rotated/never-gated EXTRAS parity ledger.
-
-Split out of plans/parity_extras.py (r14) purely for navigability —
-the registry (plans/extras_base.py), the compare loop
-(tests/test_rotated_parity.py), and every row's (spark_fn, oracle_sql)
-contract are unchanged. parity_extras.py keeps the ledger's charter
-and rotation history and re-exports the public faces.
-"""
+"""Documents-table non-gate rows, each registered with ``@query(name,
+gate=False)`` beside its body and paired with an ``oracle(name, sql)``
+mirror (checked by tests/test_rotated_parity.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_instagram_spark.plans.extras_base import EXTRAS, _llm
-from etl_instagram_spark.plans.queries import _t
+from etl_instagram_spark.plans.oracle import oracle
+from etl_instagram_spark.plans.q_docs import (
+    MINHASH_BANDS,
+    MINHASH_K,
+    _BM25_TERMS,
+    _BPE_MAX_WORDS,
+    _BPE_N_MERGES,
+    _bpe_fit_word_map,
+    _sql_bm25_topk,
+    _sql_minhash_bands,
+    _sql_stop_drop_predicate,
+)
+from etl_instagram_spark.plans.q_docs_pipeline import _PACK_SHARDS, _sql_pack_shard
+from etl_instagram_spark.plans.q_emb import SQL_KNN_COSINE, emb_knn_cosine
+from etl_instagram_spark.plans.q_shared import SQL_TOKS, _spread, oracle_parquet
+from etl_instagram_spark.plans.queries import _t, query
 
 
 def _sql_top_terms_per_doc() -> str:
-    from etl_instagram_spark.plans.llm_queries import _sql_stop_drop_predicate
-
     return f"""
     WITH toks AS (
       SELECT doc_id,
@@ -43,6 +50,10 @@ def _sql_top_terms_per_doc() -> str:
     """
 
 
+oracle("docs_top_terms_per_doc", _sql_top_terms_per_doc())
+
+
+@query("docs_top_terms_per_doc", gate=False)
 def docs_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-row top_terms kernel (enrich/topics.top_terms_col — the
     reference's getTopics output shape) validated against the oracle:
@@ -65,17 +76,13 @@ def docs_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("docs_minhash_bands", gate=False)
 def docs_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banding audit: per band, distinct buckets and candidate
     pairs (Σ n·(n−1)/2 over buckets) — the tuning surface for the verify
-    join's cost model (r6 rotation; the same signature/band machinery
-    stays gated end-to-end via docs_near_dedup_summary)."""
+    join's cost model (the same signature/band machinery
+    docs_near_dedup_summary runs end to end)."""
     from etl_instagram_spark.operators.dedup import _band_hashes
-    from etl_instagram_spark.plans.llm_queries import (
-        MINHASH_BANDS,
-        MINHASH_K,
-        _spread,
-    )
     from etl_instagram_spark.functions import text as T
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
@@ -94,19 +101,21 @@ def docs_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+oracle("docs_minhash_bands", _sql_minhash_bands())
+
+
+@query("docs_hybrid_rrf", gate=False)
 def _docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval, value-checked end-to-end: reciprocal-rank
     fusion of the BM25 top-10 (docs_bm25_topk's list) with the exact
     cosine top-10 for vec_id=0 (emb_knn_cosine's list, doc_id = vec_id
-    as in docs_emb_crossmodal). Never gate-registered — EXTRAS has no
-    row cap, and this pins rrf_fuse's rank+fusion arithmetic against a
-    full DuckDB replay."""
+    as in docs_emb_crossmodal). This pins rrf_fuse's rank+fusion
+    arithmetic against a full DuckDB replay."""
     from etl_instagram_spark.operators.retrieval import bm25_topk, rrf_fuse
-    from etl_instagram_spark.plans import llm_queries
 
     docs = _t(spark, sf_dir, "documents")
-    lex = bm25_topk(docs, "doc_id", "text", llm_queries._BM25_TERMS, k=10)
-    vec = llm_queries.emb_knn_cosine(spark, sf_dir).withColumnRenamed(
+    lex = bm25_topk(docs, "doc_id", "text", _BM25_TERMS, k=10)
+    vec = emb_knn_cosine(spark, sf_dir).withColumnRenamed(
         "vec_id", "doc_id"
     )
     return rrf_fuse(
@@ -121,15 +130,13 @@ def _docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hybrid_rrf() -> str:
-    from etl_instagram_spark.plans import llm_queries
-
     return f"""
     WITH lex AS (
       SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r0
-      FROM ({llm_queries._sql_bm25_topk()})),
+      FROM ({_sql_bm25_topk()})),
     vec AS (
       SELECT vec_id AS doc_id, row_number() OVER (ORDER BY cos_sim DESC, vec_id) AS r1
-      FROM ({llm_queries.SQL_KNN_COSINE})),
+      FROM ({SQL_KNN_COSINE})),
     f AS (
       SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
              CAST(r0 AS DOUBLE) AS rank_0,
@@ -143,19 +150,17 @@ def _sql_hybrid_rrf() -> str:
     """
 
 
-def _docs_quality_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite quality-score bands (r6 rotation for docs_bpe_tokens;
-    quality scoring stays gated via docs_gopher_filter's nine rules)."""
-    return _llm("docs_quality_bands")(spark, sf_dir)
+oracle("docs_hybrid_rrf", _sql_hybrid_rrf())
 
 
+@query("docs_unigram_ppl", gate=False)
 def _docs_unigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality signal, value-checked end-to-end: fit the
     add-one unigram model on the corpus (one distributed counting pass),
     score every document's bits-per-word relationally (broadcast model
-    join — no UDF), roll up per source. Never gate-registered — EXTRAS
-    has no row cap; the SQL mirror re-fits the model from DuckDB's
-    counts through the same pure math and inlines identical doubles."""
+    join — no UDF), roll up per source. The SQL mirror re-fits the model
+    from DuckDB's counts through the same pure math and inlines identical
+    doubles."""
     from etl_instagram_spark.operators.lm import doc_bits_per_word, fit_unigram_lm
 
     docs = _t(spark, sf_dir, "documents")
@@ -175,8 +180,6 @@ def _docs_unigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_unigram_ppl() -> str:
-    import os
-
     import duckdb
 
     from etl_instagram_spark.operators.lm import (
@@ -185,8 +188,7 @@ def _sql_unigram_ppl() -> str:
     )
     from etl_instagram_spark.operators.tokenizer import WORD_SPLIT_REGEX
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = oracle_parquet("documents")
     split = f"string_split_regex(lower(text), '{WORD_SPLIT_REGEX}')"
     con = duckdb.connect()
     freqs = con.sql(
@@ -220,13 +222,17 @@ def _sql_unigram_ppl() -> str:
     """
 
 
+oracle("docs_unigram_ppl", _sql_unigram_ppl)
+
+
+@query("docs_bigram_ppl", gate=False)
 def _docs_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stupid-backoff bigram perplexity per source (the fuller CCNet
     signal): doc-initial words score by unigram, later words by their
     observed bigram relative frequency or the 0.4-discounted unigram
     backoff. Spark shapes it as posexplode → window lag → two broadcast
     joins; the mirror re-derives pairs by list-zipping — different
-    plans, same math, same literals. Never gate-registered."""
+    plans, same math, same literals."""
     from etl_instagram_spark.operators.lm import (
         doc_bits_per_word_bigram,
         fit_bigram_lm,
@@ -249,8 +255,6 @@ def _docs_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bigram_ppl() -> str:
-    import os
-
     import duckdb
 
     from etl_instagram_spark.operators.lm import (
@@ -259,8 +263,7 @@ def _sql_bigram_ppl() -> str:
     )
     from etl_instagram_spark.operators.tokenizer import WORD_SPLIT_REGEX
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = oracle_parquet("documents")
     split = f"string_split_regex(lower(text), '{WORD_SPLIT_REGEX}')"
     # refit BOTH tables from DuckDB counts through the same pure model
     # math the Spark side used (fit_bigram_lm's driver step, re-applied)
@@ -335,28 +338,31 @@ def _sql_bigram_ppl() -> str:
     """
 
 
+oracle("docs_bigram_ppl", _sql_bigram_ppl)
+
+
 _BPE_PACK_BUDGET = 2048
 
 
+@query("docs_bpe_pack", gate=False)
 def _docs_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenize-then-pack pipeline end to end: train BPE on the
     corpus, count LEARNED tokens per doc (not the n_chars proxy), pack
     into token-budget bins, roll up per shard. Certifies the real
     pretraining composition — tokenizer fit → Arrow encode → window
-    packing — in one value-checked result. Never gate-registered."""
+    packing — in one value-checked result."""
     from etl_instagram_spark.operators.packing import pack_cumsum
     from etl_instagram_spark.operators.tokenizer import bpe_token_count, fit_bpe
-    from etl_instagram_spark.plans import llm_queries as LQ
 
     docs = _t(spark, sf_dir, "documents")
     merges = fit_bpe(
-        docs, "text", n_merges=LQ._BPE_N_MERGES, max_words=LQ._BPE_MAX_WORDS
+        docs, "text", n_merges=_BPE_N_MERGES, max_words=_BPE_MAX_WORDS
     )
     counts = docs.select(
         "doc_id", bpe_token_count("text", merges).alias("bpe_t")
     )
     packed = pack_cumsum(
-        counts, "doc_id", "bpe_t", budget=_BPE_PACK_BUDGET, shards=LQ._PACK_SHARDS
+        counts, "doc_id", "bpe_t", budget=_BPE_PACK_BUDGET, shards=_PACK_SHARDS
     )
     per_bin = packed.groupBy("shard", "bin_idx").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -375,9 +381,7 @@ def _docs_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bpe_pack() -> str:
-    from etl_instagram_spark.plans import llm_queries as LQ
-
-    split, wm = LQ._bpe_fit_word_map()
+    split, wm = _bpe_fit_word_map()
     b = _BPE_PACK_BUDGET
     return f"""
     WITH wm(word, nt) AS (VALUES {wm}),
@@ -393,7 +397,7 @@ def _sql_bpe_pack() -> str:
       LEFT JOIN wm ON x.w = wm.word
       GROUP BY d.doc_id),
     base AS (
-      SELECT doc_id, t, {LQ._sql_pack_shard("doc_id")} AS shard FROM counts),
+      SELECT doc_id, t, {_sql_pack_shard("doc_id")} AS shard FROM counts),
     binned AS (
       SELECT shard, t,
              CAST(floor(coalesce(sum(t) OVER (
@@ -413,17 +417,20 @@ def _sql_bpe_pack() -> str:
     """
 
 
+oracle("docs_bpe_pack", _sql_bpe_pack)
+
+
 _SPAN_N = 13
 
 
+@query("docs_span_dedup", gate=False)
 def _docs_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style duplicate-span removal over the real documents
     table (operators/cleanup.remove_duplicate_spans at n=13): per doc,
     the md5 of the post-removal text plus the removal counts. The md5
     pins every surviving byte — untouched docs must round-trip their
     ORIGINAL text exactly, edited docs must drop exactly the covered
-    words — while keeping the compared frame narrow. Never
-    gate-registered (EXTRAS has no row cap)."""
+    words — while keeping the compared frame narrow."""
     from etl_instagram_spark.operators.cleanup import remove_duplicate_spans
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -436,7 +443,9 @@ def _docs_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_SQL_SPAN_DEDUP = f"""
+oracle(
+    "docs_span_dedup",
+    f"""
     WITH docs AS (
       SELECT doc_id, text FROM documents
     ),
@@ -498,9 +507,11 @@ _SQL_SPAN_DEDUP = f"""
     LEFT JOIN nrem    ON nrem.doc_id = d.doc_id
     LEFT JOIN rebuilt ON rebuilt.doc_id = d.doc_id
     ORDER BY d.doc_id
-    """
+    """,
+)
 
 
+@query("docs_perplexity_buckets", gate=False)
 def _docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail bucketing certified end-to-end
     (operators/lm.perplexity_buckets, by="lang"): per document the
@@ -508,8 +519,7 @@ def _docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The mirror re-fits the unigram model from DuckDB's counts (same pure
     math, identical inlined doubles — the docs_unigram_ppl pattern) and
     replays the tertile cut as window SQL over the same deterministic
-    (bits_per_word, doc_id) order. Wordless docs keep a NULL bucket.
-    Never gate-registered (EXTRAS has no row cap)."""
+    (bits_per_word, doc_id) order. Wordless docs keep a NULL bucket."""
     from etl_instagram_spark.operators.lm import fit_unigram_lm, perplexity_buckets
 
     docs = _t(spark, sf_dir, "documents")
@@ -525,8 +535,6 @@ def _docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_perplexity_buckets() -> str:
-    import os
-
     import duckdb
 
     from etl_instagram_spark.operators.lm import (
@@ -535,8 +543,7 @@ def _sql_perplexity_buckets() -> str:
     )
     from etl_instagram_spark.operators.tokenizer import WORD_SPLIT_REGEX
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = oracle_parquet("documents")
     split = f"string_split_regex(lower(text), '{WORD_SPLIT_REGEX}')"
     con = duckdb.connect()
     freqs = con.sql(
@@ -582,6 +589,10 @@ def _sql_perplexity_buckets() -> str:
     """
 
 
+oracle("docs_perplexity_buckets", _sql_perplexity_buckets)
+
+
+@query("docs_gopher_ngram_flags", gate=False)
 def _docs_gopher_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nine Gopher n-gram repetition rules (cleanup.
     gopher_ngram_filter at paper-default thresholds) certified
@@ -590,8 +601,7 @@ def _docs_gopher_ngram_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-coverage arithmetic; THIS row replays it in a second engine —
     DuckDB recomputes every top/dup char fraction from scratch with
     window SQL + list functions (the fractions are integer/integer
-    divisions, so the > threshold comparisons agree exactly). Never
-    gate-registered."""
+    divisions, so the > threshold comparisons agree exactly)."""
     from etl_instagram_spark.operators.cleanup import gopher_ngram_filter
 
     docs = _t(spark, sf_dir, "documents")
@@ -693,6 +703,10 @@ def _sql_gopher_ngram_flags() -> str:
     )
 
 
+oracle("docs_gopher_ngram_flags", _sql_gopher_ngram_flags())
+
+
+@query("docs_dsir_selection", gate=False)
 def _docs_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling certified end-to-end (operators/dsir):
     fit the hashed-ngram importance-ratio model with the English slice
@@ -701,8 +715,7 @@ def _docs_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-fits the model from DuckDB's OWN feature counts through the same
     pure math (identical inlined doubles — the lm.py contract), so the
     row certifies the engine-neutral feature hashing, the counting, the
-    weight sums, and the deterministic Gumbel coupling at once. Never
-    gate-registered."""
+    weight sums, and the deterministic Gumbel coupling at once."""
     from etl_instagram_spark.operators.dsir import fit_dsir, importance_sample
 
     docs = _t(spark, sf_dir, "documents")
@@ -715,15 +728,12 @@ def _docs_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_dsir_selection() -> str:
-    import os
-
     import duckdb
 
     from etl_instagram_spark.operators.dsir import dsir_model_from_counts
 
     n_buckets = 1024
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = oracle_parquet("documents")
     split = (
         "list_filter(string_split_regex(trim(lower(coalesce(text, ''))), "
         "'[ \\t\\n\\x0B\\f\\r]+'), t -> t <> '')"
@@ -782,10 +792,14 @@ def _sql_dsir_selection() -> str:
     )
 
 
+oracle("docs_dsir_selection", _sql_dsir_selection)
+
+
+@query("docs_token_weighted_length_quantiles", gate=False)
 def _docs_token_weighted_length_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Never-gated (r13): WEIGHTED dyadic-CM quantiles
+    """WEIGHTED dyadic-CM quantiles
     (operators/sketches.dcm_sketch weight_col, the r13 face) — per-lang
     doc-length quantiles weighted by TOKEN MASS: "the length below
     which a quarter/half/three-quarters of the corpus TOKENS sit", the
@@ -838,7 +852,6 @@ def _sql_docs_token_weighted_length_quantiles() -> str:
         dcm_quantiles_sql,
         dcm_sketch_sql,
     )
-    from etl_instagram_spark.plans.llm_queries import SQL_TOKS
 
     wt = f"len({SQL_TOKS})"
     sk = dcm_sketch_sql(
@@ -862,10 +875,17 @@ def _sql_docs_token_weighted_length_quantiles() -> str:
     """
 
 
+oracle(
+    "docs_token_weighted_length_quantiles",
+    _sql_docs_token_weighted_length_quantiles(),
+)
+
+
+@query("docs_token_weighted_domain_hitters", gate=False)
 def _docs_token_weighted_domain_hitters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Never-gated (r13): WEIGHTED exact heavy hitters
+    """WEIGHTED exact heavy hitters
     (operators/frequency.heavy_hitters weight_col, the r13 mode) —
     sources holding ≥ 1/21 of the corpus's TOKEN MASS, not 1/21 of its
     documents: the corpus-concentration audit a mixture designer runs
@@ -890,7 +910,6 @@ def _docs_token_weighted_domain_hitters(
 
 
 def _sql_docs_token_weighted_domain_hitters() -> str:
-    from etl_instagram_spark.plans.llm_queries import SQL_TOKS
 
     wt = f"len({SQL_TOKS})"
     # source IS NOT NULL mirrors the Spark operator's null-term
@@ -907,8 +926,15 @@ def _sql_docs_token_weighted_domain_hitters() -> str:
     """
 
 
+oracle(
+    "docs_token_weighted_domain_hitters",
+    _sql_docs_token_weighted_domain_hitters(),
+)
+
+
+@query("docs_pps_sample", gate=False)
 def _docs_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r11): systematic PPS sampling
+    """Systematic PPS sampling
     (operators/sampling.pps_sample) — a fixed budget of 300 draws from
     the documents pool weighted by n_chars, selection a pure int64
     grid walk over the hash-shuffled cumulative-weight line; the whole
@@ -938,8 +964,12 @@ def _sql_docs_pps_sample() -> str:
     """
 
 
+oracle("docs_pps_sample", _sql_docs_pps_sample())
+
+
+@query("docs_kmv_sample", gate=False)
 def _docs_kmv_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r14): bottom-k sampling (operators/kmv.kmv_sample)
+    """Bottom-k sampling (operators/kmv.kmv_sample)
     — a deterministic fixed-SIZE uniform sample of 48 doc_ids per lang
     (every sf0.01 lang holds 64–218 docs, so the fixed-k branch is live
     for all five). No RNG state anywhere: membership is 'hash(doc_id)
@@ -964,107 +994,12 @@ def _sql_docs_kmv_sample() -> str:
     return f"SELECT * FROM ({inner}) ORDER BY lang, doc_id"
 
 
-def _register() -> None:
-    from etl_instagram_spark.plans import llm_queries
-    from etl_instagram_spark.plans.llm_queries import _sql_minhash_bands
-
-    EXTRAS["docs_top_terms_per_doc"] = (
-        docs_top_terms_per_doc,
-        _sql_top_terms_per_doc(),
-    )
-    EXTRAS["docs_minhash_bands"] = (docs_minhash_bands, _sql_minhash_bands())
-    EXTRAS["docs_quality_bands"] = (
-        _docs_quality_bands,
-        llm_queries.SQL_DOCS_QUALITY_BANDS,
-    )
-    EXTRAS["docs_hybrid_rrf"] = (_docs_hybrid_rrf, _sql_hybrid_rrf())
-    # docs_bm25_indexed PROMOTED to the gate at the second r15 rotation
-    # (plans/q_docs.py) — the seat given by cube_returnflag_status
-    # stored as a CALLABLE: the mirror's model literals are FIT from the
-    # gate data, and building them at import time would read parquet on
-    # every `import etl_instagram_spark` (the plans.oracle lazy pattern)
-    EXTRAS["docs_unigram_ppl"] = (_docs_unigram_ppl, _sql_unigram_ppl)
-    EXTRAS["docs_bpe_pack"] = (_docs_bpe_pack, _sql_bpe_pack)
-    EXTRAS["docs_bigram_ppl"] = (_docs_bigram_ppl, _sql_bigram_ppl)
-    EXTRAS["docs_span_dedup"] = (_docs_span_dedup, _SQL_SPAN_DEDUP)
-    # callable: model literals fit from gate data (see docs_unigram_ppl)
-    EXTRAS["docs_perplexity_buckets"] = (
-        _docs_perplexity_buckets,
-        _sql_perplexity_buckets,
-    )
-    EXTRAS["docs_gopher_ngram_flags"] = (
-        _docs_gopher_ngram_flags,
-        _sql_gopher_ngram_flags(),
-    )
-    # callable: model literals fit from gate data (see docs_unigram_ppl)
-    EXTRAS["docs_dsir_selection"] = (_docs_dsir_selection, _sql_dsir_selection)
-    # r13 rotation: SimHash per-row expression (seat given to
-    # events_cm_frequency — the driver gate now certifies the sketch
-    # family directly; the near-dup family stays gated via
-    # docs_near_dedup_summary and emb_near_dedup)
-    EXTRAS["docs_simhash"] = (
-        llm_queries.docs_simhash,
-        llm_queries.SQL_DOCS_SIMHASH,
-    )
-    # r14 rotation: prefix-filtered exact n-gram Jaccard join (seat
-    # given to events_dcm_quantiles — the driver gate now certifies the
-    # quantile face of the sketch family directly; the near-dup family
-    # stays gated via docs_near_dedup_summary and emb_near_dedup)
-    EXTRAS["docs_ngram_jaccard"] = (
-        llm_queries.docs_ngram_jaccard,
-        llm_queries.SQL_DOCS_NGRAM_JACCARD,
-    )
-    # never-gated (r13): WEIGHTED dcm quantiles (token-mass-weighted
-    # doc-length percentiles on the shared token kernel)
-    EXTRAS["docs_token_weighted_length_quantiles"] = (
-        _docs_token_weighted_length_quantiles,
-        _sql_docs_token_weighted_length_quantiles(),
-    )
-    # never-gated (r13): WEIGHTED heavy hitters (token-mass domain
-    # concentration at a live integer threshold boundary)
-    EXTRAS["docs_token_weighted_domain_hitters"] = (
-        _docs_token_weighted_domain_hitters,
-        _sql_docs_token_weighted_domain_hitters(),
-    )
-    # never-gated (r11): systematic PPS weighted sampling
-    EXTRAS["docs_pps_sample"] = (_docs_pps_sample, _sql_docs_pps_sample())
-    # docs_kmv_shingle_overlap PROMOTED to the gate at the r15 rotation
-    # (plans/q_docs.py) — the seat given by sql_brand_revenue
-    # never-gated (r14): bottom-k deterministic fixed-size sampling
-    EXTRAS["docs_kmv_sample"] = (_docs_kmv_sample, _sql_docs_kmv_sample)
+oracle("docs_kmv_sample", _sql_docs_kmv_sample)
 
 
-_register()
-
-
-# docs_weighted_sample PROMOTED to the gate at the r17 rotation
-# (plans/q_docs.py) — the seat given by customer_rolling_30d_revenue
-
-
-def _docs_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r16 rotation: the per-source frequency-cap audit
-    (plans/q_docs_pipeline.docs_domain_cap) — seat given to
-    graph_walk_embeddings. The hashed-rank cap machinery stays gated
-    via docs_hash_split_sample (same bucket_sql hash kernel) and
-    docs_corpus_mixture; the exact query keeps driver-grade value+type
-    parity here."""
-    from etl_instagram_spark.plans.q_docs_pipeline import docs_domain_cap
-
-    return docs_domain_cap(spark, sf_dir)
-
-
-def _sql_docs_domain_cap() -> str:
-    from etl_instagram_spark.plans.q_docs_pipeline import _sql_domain_cap
-
-    return _sql_domain_cap()
-
-
-# r16 rotation: per-source frequency cap (C4/RefinedWeb domain capping)
-EXTRAS["docs_domain_cap"] = (_docs_domain_cap, _sql_docs_domain_cap)
-
-
+@query("docs_nfc_normalize", gate=False)
 def _docs_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r16): Unicode NFC normalization
+    """Unicode NFC normalization
     (functions/unicodenorm.unicode_normalize, the multilingual-dedup
     prerequisite) certified cross-engine: both engines append the SAME
     decomposed suffix (e + combining acute, A + combining ring) to each
@@ -1108,5 +1043,4 @@ def _sql_docs_nfc_normalize() -> str:
     """
 
 
-# never-gated (r16): UAX #15 NFC normalization, cross-engine
-EXTRAS["docs_nfc_normalize"] = (_docs_nfc_normalize, _sql_docs_nfc_normalize)
+oracle("docs_nfc_normalize", _sql_docs_nfc_normalize)

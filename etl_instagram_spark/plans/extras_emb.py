@@ -1,39 +1,23 @@
-"""Embeddings/ANN rows of the rotated/never-gated EXTRAS parity ledger.
-
-Split out of plans/parity_extras.py (r14) purely for navigability —
-the registry (plans/extras_base.py), the compare loop
-(tests/test_rotated_parity.py), and every row's (spark_fn, oracle_sql)
-contract are unchanged. parity_extras.py keeps the ledger's charter
-and rotation history and re-exports the public faces.
-"""
+"""Embeddings/ANN non-gate rows, each registered with ``@query(name,
+gate=False)`` beside its body and paired with an ``oracle(name, sql)``
+mirror (checked by tests/test_rotated_parity.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_instagram_spark.plans.extras_base import EXTRAS, _llm
-from etl_instagram_spark.plans.queries import _t
+from etl_instagram_spark.plans.oracle import oracle
+from etl_instagram_spark.plans.q_emb import _bucket_col, _sql_ann_lsh_topk
+from etl_instagram_spark.plans.q_shared import _as_double, _dot, _spread
+from etl_instagram_spark.plans.queries import _t, query
 
 
-def _sql_ann_lsh_topk_extra() -> str:
-    from etl_instagram_spark.plans.llm_queries import _sql_ann_lsh_topk
-
-    return _sql_ann_lsh_topk()
-
-
+@query("emb_ann_lsh_topk", gate=False)
 def emb_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed ANN: top-5 cosine neighbors of vec_id=0 among vectors in
-    its LSH bucket (r6 rotation; the bucket-filtered path stays gated
-    via emb_ann_recall and emb_knn_join_recall)."""
-    from etl_instagram_spark.plans.llm_queries import (
-        _as_double,
-        _bucket_col,
-        _dot,
-        _spread,
-        _t,
-    )
-
+    its LSH bucket (the bucket-filtered path of emb_ann_recall and
+    emb_knn_join_recall)."""
     emb = _spread(spark, _t(spark, sf_dir, "embeddings")).withColumn(
         "bucket", _bucket_col()
     )
@@ -53,15 +37,12 @@ def emb_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _emb_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force single-query cosine top-10 (r6 rotation for
-    emb_semantic_dedup; the exact-cosine surface stays gated via the
-    ground-truth sides of emb_ann_recall / emb_knn_join_recall)."""
-    return _llm("emb_knn_cosine")(spark, sf_dir)
+oracle("emb_ann_lsh_topk", _sql_ann_lsh_topk())
 
 
+@query("emb_int8_quantization", gate=False)
 def _emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r16): symmetric per-vector int8 scalar quantization
+    """Symmetric per-vector int8 scalar quantization
     (operators/similarity.quantize_embeddings) — the vector-store
     compression step between raw embeddings and the PQ/IVFADC index
     faces. Codes and scales are exact across engines by construction
@@ -74,8 +55,6 @@ def _emb_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
         dequantize_col,
         quantize_embeddings,
     )
-    from etl_instagram_spark.plans.q_shared import _as_double, _dot
-
     emb = _t(spark, sf_dir, "embeddings")
     qz = quantize_embeddings(emb, "embedding", "vec_id")
     joined = qz.join(
@@ -129,8 +108,12 @@ def _sql_emb_int8_quantization() -> str:
     """
 
 
+oracle("emb_int8_quantization", _sql_emb_int8_quantization)
+
+
+@query("emb_quantized_ann_rerank", gate=False)
 def _emb_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r17): the composed quantized-ANN serving path an LLM
+    """The composed quantized-ANN serving path an LLM
     vector store actually runs — int8-quantize the corpus (r16
     quantize_embeddings), assign IVF cells and score candidates on the
     DEQUANTIZED approximations (the store never touches the floats),
@@ -160,8 +143,6 @@ def _emb_quantized_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_cell,
         quantize_embeddings,
     )
-    from etl_instagram_spark.plans.q_shared import _as_double, _dot
-
     def _cos(a, b):
         return F.round(
             _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 6
@@ -390,38 +371,4 @@ def _sql_emb_quantized_ann_rerank() -> str:
     """
 
 
-def _register() -> None:
-    from etl_instagram_spark.plans import llm_queries
-
-    EXTRAS["emb_ann_lsh_topk"] = (emb_ann_lsh_topk, _sql_ann_lsh_topk_extra())
-    EXTRAS["emb_knn_cosine"] = (_emb_knn_cosine, llm_queries.SQL_KNN_COSINE)
-    # r9 rotation (for emb_ann_ivf_stored): the IVF recall formulation —
-    # oracle callable because its centroid literals are fit from data
-    EXTRAS["emb_ann_ivf_recall"] = (
-        llm_queries.emb_ann_ivf_recall,
-        llm_queries._ivf_oracle_sql,
-    )
-    # r13 rotation: multi-probe LSH recall (seat given to
-    # events_funnel_levels — the driver gate now certifies the
-    # behavioral family directly; the ANN family stays gated via
-    # emb_ann_ivf_stored / emb_pq_recall / emb_knn_join_recall)
-    EXTRAS["emb_ann_recall"] = (
-        llm_queries.emb_ann_recall,
-        llm_queries.SQL_EMB_ANN_RECALL,
-    )
-    # never-gated (r16): int8 scalar quantization — codes/scales exact
-    # across engines, reconstruction cosine at 6 places
-    EXTRAS["emb_int8_quantization"] = (
-        _emb_int8_quantization,
-        _sql_emb_int8_quantization,
-    )
-    # never-gated (r17): the composed quantized-ANN serving path —
-    # quantize -> IVF probe on dequantized codes -> exact float re-rank,
-    # recall vs the float path per query
-    EXTRAS["emb_quantized_ann_rerank"] = (
-        _emb_quantized_ann_rerank,
-        _sql_emb_quantized_ann_rerank,
-    )
-
-
-_register()
+oracle("emb_quantized_ann_rerank", _sql_emb_quantized_ann_rerank)

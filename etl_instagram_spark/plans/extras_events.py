@@ -1,11 +1,6 @@
-"""Events-table rows of the rotated/never-gated EXTRAS parity ledger.
-
-Split out of plans/parity_extras.py (r14) purely for navigability —
-the registry (plans/extras_base.py), the compare loop
-(tests/test_rotated_parity.py), and every row's (spark_fn, oracle_sql)
-contract are unchanged. parity_extras.py keeps the ledger's charter
-and rotation history and re-exports the public faces.
-"""
+"""Events-table non-gate rows, each registered with ``@query(name,
+gate=False)`` beside its body and paired with an ``oracle(name, sql)``
+mirror (checked by tests/test_rotated_parity.py)."""
 
 from __future__ import annotations
 
@@ -13,11 +8,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from etl_instagram_spark.plans.extras_base import EXTRAS, _extra
-from etl_instagram_spark.plans.queries import _t
+from etl_instagram_spark.plans.oracle import oracle
+from etl_instagram_spark.plans.queries import _t, query
 
 
-@_extra(
+oracle(
     "events_sessionization",
     """
     WITH flagged AS (
@@ -45,11 +40,13 @@ from etl_instagram_spark.plans.queries import _t
     ORDER BY user_id
     """,
 )
+
+
+@query("events_sessionization", gate=False)
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity): lag + cumulative sum
-    of session-start flags — the batch analogue of session_window (r6
-    rotation; the NATIVE session_window formulation stays gated via
-    events_session_window_native)."""
+    of session-start flags — the batch analogue of the NATIVE
+    session_window in events_session_window_native."""
     from etl_instagram_spark.plans.queries import _epoch_s
 
     ev = _t(spark, sf_dir, "events")
@@ -79,7 +76,9 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EVENTS_GAPFILL = """
+oracle(
+    "events_gapfill",
+    """
     WITH obs AS (
       SELECT event_type AS key,
              CAST(floor(epoch(ts) / 3600) AS BIGINT) * 3600 AS b,
@@ -118,15 +117,16 @@ _SQL_EVENTS_GAPFILL = """
                            * ((b - prev_b) / nullif(next_b - prev_b, 0)), 6)
                 ELSE prev_v END AS value_linear
     FROM w ORDER BY event_type, bucket_ts
-    """
+    """,
+)
 
 
+@query("events_gapfill", gate=False)
 def _events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly gap-filled events per type, LOCF + linear (the
     time_bucket_gapfill shape, operators/temporal.gapfill). Grid size is
-    O(keys × buckets) regardless of event count. Never gate-registered;
-    the mirror replays bucketing, per-key grids, and both fills with
-    IGNORE-NULLS windows."""
+    O(keys × buckets) regardless of event count; the mirror replays
+    bucketing, per-key grids, and both fills with IGNORE-NULLS windows."""
     from etl_instagram_spark.operators.temporal import gapfill
 
     return gapfill(_t(spark, sf_dir, "events"), bucket="1 hour").orderBy(
@@ -134,7 +134,9 @@ def _events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_EVENTS_ANOMALIES = """
+oracle(
+    "events_anomalies",
+    """
     WITH scored AS (
       SELECT event_type, ts, event_id, value,
              round((value - avg(value) OVER w)
@@ -148,14 +150,16 @@ _SQL_EVENTS_ANOMALIES = """
              AS n_anomalies,
            round(max(abs(z_score)), 4) AS max_abs_z
     FROM scored GROUP BY event_type ORDER BY event_type
-    """
+    """,
+)
 
 
+@query("events_anomalies", gate=False)
 def _events_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling z-score anomaly profile per event type
-    (temporal.rolling_zscore, lookback 100, |z| > 3). Never
-    gate-registered; the mirror replays the trailing window, the
-    sample-stddev guard, and the flag threshold."""
+    (temporal.rolling_zscore, lookback 100, |z| > 3); the mirror
+    replays the trailing window, the sample-stddev guard, and the flag
+    threshold."""
     from etl_instagram_spark.operators.temporal import rolling_zscore
 
     scored = rolling_zscore(_t(spark, sf_dir, "events"))
@@ -170,8 +174,9 @@ def _events_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("events_ewma", gate=False)
 def _events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): bounded-window exponential smoothing
+    """Bounded-window exponential smoothing
     (operators/temporal.ewma_smooth) over each event-type series —
     per-type row count, an order-independent integer checksum of every
     smoothed value (Σ floor(ewma·10^6)), and the series' final ewma.
@@ -223,8 +228,12 @@ def _sql_events_ewma() -> str:
     """
 
 
+oracle("events_ewma", _sql_events_ewma())
+
+
+@query("events_cohort_retention", gate=False)
 def _events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): weekly cohort retention — cohort by first-
+    """Weekly cohort retention — cohort by first-
     event week, activity by any-event week, offsets 0..8."""
     from etl_instagram_spark.operators.funnel import cohort_retention
 
@@ -232,8 +241,9 @@ def _events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cohort_retention(ev, "user_id", "ts", max_offset=8)
 
 
+@query("events_transitions", gate=False)
 def _events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): first-order Markov transition matrix over
+    """First-order Markov transition matrix over
     each user's event sequence under the (ts, event_id) total order —
     counts + row-normalized probabilities, replayed in SQL."""
     from etl_instagram_spark.operators.funnel import transition_matrix
@@ -242,7 +252,9 @@ def _events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transition_matrix(ev, "user_id", "ts", "event_type", "event_id")
 
 
-_SQL_EVENTS_TRANSITIONS = """
+oracle(
+    "events_transitions",
+    """
     WITH pairs AS (
       SELECT lag(event_type) OVER (PARTITION BY user_id
                                    ORDER BY ts, event_id) AS from_state,
@@ -258,10 +270,13 @@ _SQL_EVENTS_TRANSITIONS = """
                  6) AS prob
     FROM counts
     ORDER BY from_state, to_state
+    """,
+)
+
+
+oracle(
+    "events_cohort_retention",
     """
-
-
-_SQL_COHORT_RETENTION = """
     WITH f AS (SELECT user_id AS u, date_trunc('week', min(ts)) AS cohort
                FROM events GROUP BY u),
     a AS (SELECT DISTINCT user_id AS u, date_trunc('week', ts) AS wk
@@ -280,23 +295,5 @@ _SQL_COHORT_RETENTION = """
            round(n_active * 100.0 / cohort_size, 4) AS retention_pct
     FROM j JOIN cs USING (cohort)
     ORDER BY cohort_week, week_offset
-    """
-
-
-def _register() -> None:
-    EXTRAS["events_gapfill"] = (_events_gapfill, _SQL_EVENTS_GAPFILL)
-    EXTRAS["events_anomalies"] = (_events_anomalies, _SQL_EVENTS_ANOMALIES)
-    # events_hll_distinct lived here r10–r13; PROMOTED to the gate in
-    # r14 (plans/q_events.py) — the seat that completes direct driver
-    # certification of all four sketch faces
-    # never-gated (r10): bounded-window exponential smoothing
-    EXTRAS["events_ewma"] = (_events_ewma, _sql_events_ewma())
-    # never-gated (r10): behavioral analytics — funnel + cohort retention
-    EXTRAS["events_cohort_retention"] = (
-        _events_cohort_retention,
-        _SQL_COHORT_RETENTION,
-    )
-    EXTRAS["events_transitions"] = (_events_transitions, _SQL_EVENTS_TRANSITIONS)
-
-
-_register()
+    """,
+)

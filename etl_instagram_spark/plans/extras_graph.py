@@ -1,23 +1,19 @@
-"""Graph/entity rows of the rotated/never-gated EXTRAS parity ledger.
-
-Split out of plans/parity_extras.py (r14) purely for navigability —
-the registry (plans/extras_base.py), the compare loop
-(tests/test_rotated_parity.py), and every row's (spark_fn, oracle_sql)
-contract are unchanged. parity_extras.py keeps the ledger's charter
-and rotation history and re-exports the public faces.
-"""
+"""Graph/entity non-gate rows, each registered with ``@query(name,
+gate=False)`` beside its body and paired with an ``oracle(name, sql)``
+mirror (checked by tests/test_rotated_parity.py)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_instagram_spark.plans.extras_base import EXTRAS
-from etl_instagram_spark.plans.queries import _t
+from etl_instagram_spark.plans.oracle import oracle
+from etl_instagram_spark.plans.queries import _t, query
 
 
+@query("graph_ppr_building_suppliers", gate=False)
 def _graph_ppr_building_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): PERSONALIZED PageRank — teleport mass confined
+    """PERSONALIZED PageRank — teleport mass confined
     to BUILDING-segment customers, ranking suppliers as seen from that
     segment (the seeded-importance shape: rank a neighborhood from a
     trusted subset). Same int64 kernel as the gate row
@@ -66,8 +62,12 @@ def _sql_ppr_building_suppliers() -> str:
     """
 
 
+oracle("graph_ppr_building_suppliers", _sql_ppr_building_suppliers())
+
+
+@query("graph_pagerank_weighted", gate=False)
 def _graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): WEIGHTED PageRank — the walk follows edges in
+    """WEIGHTED PageRank — the walk follows edges in
     proportion to order-line counts (interaction intensity), so heavy
     trading pairs pull rank. Same int64 kernel; per-edge contrib
     (rank·w) div W(u) replayed whole in DuckDB."""
@@ -107,8 +107,12 @@ def _sql_pagerank_weighted() -> str:
     """
 
 
+oracle("graph_pagerank_weighted", _sql_pagerank_weighted())
+
+
+@query("graph_pagerank_dangling", gate=False)
 def _graph_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r11): redistribute-dangling PageRank over the
+    """Redistribute-dangling PageRank over the
     DIRECTED customer→supplier order graph — every supplier is a
     dangling sink, so this row exercises the standard-formulation
     per-round dangling-mass redistribution end to end (int64 share =
@@ -150,8 +154,12 @@ def _sql_graph_pagerank_dangling() -> str:
     """
 
 
+oracle("graph_pagerank_dangling", _sql_graph_pagerank_dangling())
+
+
+@query("part_entity_snm", gate=False)
 def _part_entity_snm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r11): SORTED-NEIGHBORHOOD entity blocking
+    """SORTED-NEIGHBORHOOD entity blocking
     (operators/entity.sorted_neighborhood_pairs) — pair volume exactly
     n·(window−1) by construction, the hot-block-proof alternative to
     key blocking. The oracle replays the GLOBAL rank (bucket-offset on
@@ -199,8 +207,12 @@ def _sql_part_entity_snm() -> str:
     """
 
 
+oracle("part_entity_snm", _sql_part_entity_snm())
+
+
+@query("part_k_core", gate=False)
 def _part_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r11): k-core decomposition (operators/graph.k_core)
+    """K-core decomposition (operators/graph.k_core)
     — the dense co-purchase backbone after synchronously peeling
     sub-k-degree nodes to a fixpoint. The oracle replays the same peel
     as fixed-round MATERIALIZED CTEs with a LOUD convergence assert
@@ -233,8 +245,12 @@ def _sql_part_k_core() -> str:
     """
 
 
+oracle("part_k_core", _sql_part_k_core())
+
+
+@query("graph_random_walks", gate=False)
 def _graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): deterministic DeepWalk-style random walks
+    """Deterministic DeepWalk-style random walks
     over the customer↔supplier graph — 4 steps from every node, next
     hop = hash32(seed, walk, step) mod outdeg over sorted neighbors, so
     the walk corpus is a pure function of (graph, seed). Per-step
@@ -274,8 +290,12 @@ def _sql_graph_random_walks() -> str:
     """
 
 
+oracle("graph_random_walks", _sql_graph_random_walks())
+
+
+@query("graph_weighted_walks", gate=False)
 def _graph_weighted_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r11): WEIGHTED deterministic walks — the interval
+    """WEIGHTED deterministic walks — the interval
     pick follows edges ∝ order-line count (P(v→u) = w/W(v)) over the
     customer↔supplier graph, with the max_degree hub cap engaged so
     the cap + cumulative-weight machinery certify together. Per-step
@@ -327,8 +347,12 @@ def _sql_graph_weighted_walks() -> str:
     """
 
 
+oracle("graph_weighted_walks", _sql_graph_weighted_walks())
+
+
+@query("part_triangle_stats", gate=False)
 def _part_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r10): triangle counting / clustering coefficients
+    """Triangle counting / clustering coefficients
     over the part co-purchase projection (parts co-occurring on ≥ 3
     orders). Oriented-wedge algorithm — two key-equi joins, every
     triangle found once; the oracle replays projection, orientation,
@@ -357,16 +381,12 @@ def _sql_part_triangle_stats() -> str:
     """
 
 
-# (graph_walk_embeddings PROMOTED to the gate at the r16 rotation —
-# plans/q_graph.py now certifies the walks→cooc→PPMI→projection chain
-# through the driver on the 1997Q1 subgraph, every embedding float
-# replayed; seat given by docs_domain_cap, kept in plans/extras_docs.py
-# with full parity. The full-graph chain stays bit-checked against
-# DuckDB in tests/test_graph_embed.py.)
+oracle("part_triangle_stats", _sql_part_triangle_stats())
 
 
+@query("part_communities_weighted", gate=False)
 def _part_communities_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r15): WEIGHTED label propagation — votes carry the
+    """WEIGHTED label propagation — votes carry the
     co-purchase intensity (n_orders), so communities form around
     strongly-co-bought part clusters rather than mere adjacency. Same
     pinned (max vote, min label) argmax on exact int64 sums; same
@@ -414,8 +434,12 @@ def _sql_part_communities_weighted() -> str:
     """
 
 
+oracle("part_communities_weighted", _sql_part_communities_weighted())
+
+
+@query("graph_node2vec_walks", gate=False)
 def _graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r15): SECOND-ORDER biased walks (node2vec, Grover &
+    """SECOND-ORDER biased walks (node2vec, Grover &
     Leskovec KDD'16) over the customer↔supplier graph at the homophily
     configuration (1, 1, 2) with the hub cap engaged — the distance-2
     membership bias + integer interval pick certify together. Per-step
@@ -468,8 +492,12 @@ def _sql_graph_node2vec_walks() -> str:
     """
 
 
+oracle("graph_node2vec_walks", _sql_graph_node2vec_walks())
+
+
+@query("part_communities", gate=False)
 def _part_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r15): label-propagation communities over the
+    """Label-propagation communities over the
     co-purchase projection — the source/domain-clustering shape (group
     structurally-entangled sources, then apply mixture caps to the
     CLUSTER). Synchronous fixed-round LPA with the pinned (max votes,
@@ -513,8 +541,12 @@ def _sql_part_communities() -> str:
     """
 
 
+oracle("part_communities", _sql_part_communities())
+
+
+@query("graph_node2vec_embeddings", gate=False)
 def _graph_node2vec_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Never-gated (r16): the node2vec-FED embedding chain — the
+    """The node2vec-FED embedding chain — the
     composition the graph_embed docstrings promise: second-order biased
     walks (homophily config (1, 1, 2), hub cap 32) emit the same
     (walk_id, step, node) schema first-order walks do, so the
@@ -590,78 +622,4 @@ def _sql_graph_node2vec_embeddings() -> str:
     """
 
 
-# (graph_node2vec_embeddings_97q1 — the r17-built BOUNDED node2vec
-# embedding chain — was PROMOTED to the gate at the r18 rotation, per
-# the charter: the row now lives in plans/q_graph.py verbatim; the
-# FULL-graph chain below and the walk corpus stay value-parity-kept
-# here)
-
-
-def _register() -> None:
-    # never-gated (r10): personalized PageRank — seeded teleport variant
-    # of the gate's graph_pagerank_suppliers
-    EXTRAS["graph_ppr_building_suppliers"] = (
-        _graph_ppr_building_suppliers,
-        _sql_ppr_building_suppliers(),
-    )
-    # never-gated (r10): weighted PageRank — interaction-intensity walk
-    EXTRAS["graph_pagerank_weighted"] = (
-        _graph_pagerank_weighted,
-        _sql_pagerank_weighted(),
-    )
-    # never-gated (r11): redistribute-dangling PageRank (standard
-    # formulation; the directed graph makes every supplier a sink)
-    EXTRAS["graph_pagerank_dangling"] = (
-        _graph_pagerank_dangling,
-        _sql_graph_pagerank_dangling(),
-    )
-    # never-gated (r11): k-core graph denoising
-    EXTRAS["part_k_core"] = (_part_k_core, _sql_part_k_core())
-    # never-gated (r11): sorted-neighborhood entity resolution
-    EXTRAS["part_entity_snm"] = (
-        _part_entity_snm,
-        _sql_part_entity_snm(),
-    )
-    # never-gated (r10): deterministic random-walk corpus profile
-    EXTRAS["graph_random_walks"] = (
-        _graph_random_walks,
-        _sql_graph_random_walks(),
-    )
-    # never-gated (r11): weighted walks with the hub cap engaged
-    EXTRAS["graph_weighted_walks"] = (
-        _graph_weighted_walks,
-        _sql_graph_weighted_walks(),
-    )
-    # never-gated (r10): triangles over the co-purchase projection
-    EXTRAS["part_triangle_stats"] = (
-        _part_triangle_stats,
-        _sql_part_triangle_stats(),
-    )
-    # never-gated (r15): label-propagation communities over the
-    # co-purchase projection
-    EXTRAS["part_communities"] = (
-        _part_communities,
-        _sql_part_communities(),
-    )
-    # never-gated (r15): node2vec second-order biased walks with the
-    # hub cap engaged
-    EXTRAS["graph_node2vec_walks"] = (
-        _graph_node2vec_walks,
-        _sql_graph_node2vec_walks(),
-    )
-    # never-gated (r15): weighted label propagation — co-purchase
-    # intensity votes
-    EXTRAS["part_communities_weighted"] = (
-        _part_communities_weighted,
-        _sql_part_communities_weighted(),
-    )
-    # never-gated (r16): node2vec-fed embedding chain — second-order
-    # walks through cooc -> PPMI -> projection, floats bit-replayed
-    # (lazy callable: node2vec SQL assembly is the heaviest mirror)
-    EXTRAS["graph_node2vec_embeddings"] = (
-        _graph_node2vec_embeddings,
-        _sql_graph_node2vec_embeddings,
-    )
-
-
-_register()
+oracle("graph_node2vec_embeddings", _sql_graph_node2vec_embeddings)

@@ -1,11 +1,7 @@
-"""Relational rows of the rotated/never-gated EXTRAS parity ledger.
-
-Split out of plans/parity_extras.py (r14) purely for navigability —
-the registry (plans/extras_base.py), the compare loop
-(tests/test_rotated_parity.py), and every row's (spark_fn, oracle_sql)
-contract are unchanged. parity_extras.py keeps the ledger's charter
-and rotation history and re-exports the public faces.
-"""
+"""Relational non-gate rows. Each registers with ``@query(name,
+gate=False)`` beside its body and pairs with an ``oracle(name, sql)``
+mirror; tests/test_rotated_parity.py applies the driver's value-and-type
+check to every one."""
 
 from __future__ import annotations
 
@@ -13,11 +9,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from etl_instagram_spark.plans.extras_base import EXTRAS, _extra, _llm
-from etl_instagram_spark.plans.queries import _t
+from etl_instagram_spark.plans.oracle import oracle
+from etl_instagram_spark.plans.queries import _t, query
 
 
-@_extra(
+oracle(
     "pivot_returnflag_status",
     """
     SELECT l_returnflag,
@@ -28,6 +24,9 @@ from etl_instagram_spark.plans.queries import _t
     ORDER BY l_returnflag
     """,
 )
+
+
+@query("pivot_returnflag_status", gate=False)
 def pivot_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot l_linestatus into columns per returnflag (SURVEY §2.6 —
     conditional aggregation; Catalyst rewrites pivot to CASE WHEN aggs)."""
@@ -42,7 +41,7 @@ def pivot_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_extra(
+oracle(
     "top10_customers_by_revenue",
     """
     SELECT c_custkey, c_name,
@@ -54,6 +53,9 @@ def pivot_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT 10
     """,
 )
+
+
+@query("top10_customers_by_revenue", gate=False)
 def top10_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join + agg + global top-k (reference O2 orderBy+limit generalized;
     engages TakeOrderedAndProject instead of a full sort)."""
@@ -71,7 +73,7 @@ def top10_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_extra(
+oracle(
     "orders_date_functions",
     """
     SELECT o_orderkey,
@@ -85,6 +87,9 @@ def top10_customers_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderkey
     """,
 )
+
+
+@query("orders_date_functions", gate=False)
 def orders_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time kernel (F13 analogue): extract parts, truncation, diff."""
     od = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 500)
@@ -101,7 +106,7 @@ def orders_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-@_extra(
+oracle(
     "segment_rollup",
     """
     SELECT c_mktsegment, c_nationkey,
@@ -112,9 +117,12 @@ def orders_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_mktsegment ASC NULLS FIRST, c_nationkey ASC NULLS FIRST
     """,
 )
+
+
+@query("segment_rollup", gate=False)
 def segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP over (segment, nation): hierarchical grouping sets in one
-    Expand pass — the grouping-sets surface the r5 gate rotation dropped."""
+    Expand pass."""
     cu = _t(spark, sf_dir, "customer")
     return (
         cu.rollup("c_mktsegment", "c_nationkey")
@@ -129,7 +137,7 @@ def segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_extra(
+oracle(
     "customer_running_revenue",
     """
     SELECT o_custkey, o_orderkey,
@@ -141,10 +149,12 @@ def segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_custkey, o_orderkey
     """,
 )
+
+
+@query("customer_running_revenue", gate=False)
 def customer_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative window frame (running revenue per customer) — the
-    running-sum frame surface the r5 gate rotation dropped; remaining
-    gated window queries cover rank/lag/range frames but not this."""
+    """Cumulative window frame (running revenue per customer); the gate's
+    window queries cover rank/lag/range frames but not this one."""
     od = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
     w = (
         W.partitionBy("o_custkey")
@@ -158,7 +168,7 @@ def customer_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_custkey", "o_orderkey")
 
 
-@_extra(
+oracle(
     "customers_without_urgent_orders",
     """
     SELECT c_mktsegment,
@@ -172,11 +182,13 @@ def customer_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY c_mktsegment
     """,
 )
+
+
+@query("customers_without_urgent_orders", gate=False)
 def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS → left-anti join (the engine's incremental-ingest gate,
-    J3/J5, operators.merge.anti_join_new) aggregated by segment (r6
-    rotation; the semi-join sibling stays gated via
-    q4_order_priority_semijoin)."""
+    J3/J5, operators.merge.anti_join_new) aggregated by segment; the
+    semi-join sibling is q4_order_priority_semijoin."""
     cu = _t(spark, sf_dir, "customer")
     od = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return (
@@ -196,35 +208,6 @@ def customers_without_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-def _supplier_geo_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Haversine distance bands (r6 rotation for docs_domain_cap; the
-    trig formula keeps its pytest coverage in functions/geo.py)."""
-    return _llm("supplier_geo_bands")(spark, sf_dir)
-
-
-def _q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 filter + global agg (r6 rotation for docs_gopher_filter;
-    the surface stays gated via q1 / conditional_agg_promo_share)."""
-    from etl_instagram_spark.plans.queries import q6_forecast_revenue
-
-    return q6_forecast_revenue(spark, sf_dir)
-
-
-def _part_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """parse_url host/path/query extraction (r6 rotation for
-    docs_bm25_topk; the F10 surface keeps projection pytest coverage)."""
-    return _llm("part_url_parse")(spark, sf_dir)
-
-
-def _conditional_agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 conditional aggregate (r6 rotation for emb_pq_recall;
-    CASE-WHEN-in-aggregate stays gated via docs_gopher_filter /
-    cube_returnflag_status)."""
-    from etl_instagram_spark.plans.queries import conditional_agg_promo_share
-
-    return conditional_agg_promo_share(spark, sf_dir)
-
-
 _PROFILE_COLS = [
     ("o_orderkey", True),
     ("o_custkey", True),
@@ -235,9 +218,10 @@ _PROFILE_COLS = [
 ]
 
 
+@query("orders_profile", gate=False)
 def _orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan column profile of orders (exact distincts for the
-    parity check; production defaults to HLL). Never gate-registered."""
+    parity check; production defaults to HLL)."""
     from etl_instagram_spark.operators.profiling import profile_columns
 
     return profile_columns(
@@ -269,7 +253,12 @@ def _sql_orders_profile() -> str:
     return " UNION ALL ".join(parts) + ' ORDER BY "column"'
 
 
-_SQL_CUST_RANK_DIST = """
+oracle("orders_profile", _sql_orders_profile())
+
+
+oracle(
+    "customer_rank_distributions",
+    """
     WITH rev AS (
       SELECT o_custkey AS c_custkey, round(sum(o_totalprice), 2) AS revenue
       FROM orders GROUP BY o_custkey)
@@ -279,13 +268,15 @@ _SQL_CUST_RANK_DIST = """
            round(cume_dist() OVER (ORDER BY revenue DESC, c_custkey), 6)
              AS cum_dist
     FROM rev ORDER BY c_custkey
-    """
+    """,
+)
 
 
+@query("customer_rank_distributions", gate=False)
 def _customer_rank_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank + cume_dist over customer revenue — the two rank
     distributions no other inventory window uses (rank/lag/ntile/frames
-    are covered elsewhere). Never gate-registered."""
+    are covered elsewhere)."""
     from pyspark.sql import Window
 
     o = _t(spark, sf_dir, "orders")
@@ -314,100 +305,26 @@ _SQL_ABOVE_CUST_AVG = """
     """
 
 
+@query("orders_above_customer_avg", gate=False)
 def _orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated SCALAR subquery (each order against its own customer's
     average) — the decorrelation surface no other inventory query
     exercises (the gate's correlated shapes are EXISTS/IN semi-joins).
     Catalyst rewrites it to an aggregate + join; the same ANSI text runs
-    on both engines. Never gate-registered."""
+    on both engines."""
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_SQL_ABOVE_CUST_AVG)
 
 
-def _top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r10 rotation (for docs_dup_cluster_reps): row_number top-k per
-    group — the shape stays gated via docs_bm25_topk (and
-    customer_revenue_quartiles until its own r11 rotation; both remain
-    EXTRAS-checked)."""
-    from etl_instagram_spark.plans.queries import top3_orders_per_customer
-
-    return top3_orders_per_customer(spark, sf_dir)
+oracle("orders_above_customer_avg", _SQL_ABOVE_CUST_AVG)
 
 
-def _nation_customer_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r10 rotation (for graph_pagerank_suppliers): listagg — sorted
-    collect_list stays gated via docs_top_terms_by_lang."""
-    from etl_instagram_spark.plans.llm_queries import nation_customer_listagg
-
-    return nation_customer_listagg(spark, sf_dir)
-
-
-def _part_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r10 rotation (for docs_leakage_safe_split): unpivot/Expand."""
-    from etl_instagram_spark.plans.llm_queries import part_metrics_unpivot
-
-    return part_metrics_unpivot(spark, sf_dir)
-
-
-def _order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r8 rotation (for emb_kmeans_cells): LAG-window date arithmetic —
-    offset windows stay exercised here at driver-grade parity; date
-    arithmetic stays gated via customer_rolling_30d_revenue /
-    events_asof_join."""
-    from etl_instagram_spark.plans.queries import order_gap_days
-
-    return order_gap_days(spark, sf_dir)
-
-
-def _customer_revenue_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r11 rotation (gate seat given to part_entity_resolution — the
-    driver now certifies the ER family directly): percentile-boundary
-    broadcast bucketing; the shape stays gated via
-    events_value_percentiles and docs_bm25_topk."""
-    from etl_instagram_spark.plans.llm_queries import (
-        customer_revenue_quartiles,
-    )
-
-    return customer_revenue_quartiles(spark, sf_dir)
-def _customer_rolling_30d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r17 rotation (gate seat given to docs_weighted_sample — the
-    priority-sampling estimator semantics were the strongest
-    not-yet-certified value contract in the sampling family): RANGE-frame
-    rolling window. The value-based frame machinery stays gated via
-    events_hypertable_rollup's time buckets and events_asof_join's
-    ordered merge; this exact query keeps driver-grade parity here."""
-    from etl_instagram_spark.plans.q_relational import (
-        customer_rolling_30d_revenue,
-    )
-
-    return customer_rolling_30d_revenue(spark, sf_dir)
-
-
-def _nation_customers_suppliers_full(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """r18 rotation (gate seat given to graph_node2vec_embeddings_97q1 —
-    the node2vec-fed embedding chain was the graph family's last
-    uncertified composition): FULL OUTER between two aggregates. The
-    coalesce-both-sides machinery stays gated via q5's join tree and
-    the merge family's anti-joins; this exact query keeps driver-grade
-    parity here."""
-    from etl_instagram_spark.plans.q_relational import (
-        nation_customers_suppliers_full,
-    )
-
-    return nation_customers_suppliers_full(spark, sf_dir)
-
-
+@query("orders_nested_lineitems", gate=False)
 def _orders_nested_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r14 rotation (gate seat given to events_hll_distinct — the seat
-    that completes direct driver certification of all four sketch
-    faces): nested-document round trip — collect lineitems into a
+    """Nested-document round trip: collect lineitems into a
     sorted array<struct>, then read it back with element_at / aggregate
     / transform, the engine's nested data model (SURVEY §1.1). One
-    shuffle (the groupBy); every array op is a per-row expression. The
-    nested/HOF surface stays gated via events_json_extract and
-    docs_chunking."""
+    shuffle (the groupBy); every array op is a per-row expression."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 200)
     nested = li.groupBy("l_orderkey").agg(
         F.sort_array(
@@ -429,7 +346,9 @@ def _orders_nested_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_orderkey")
 
 
-_SQL_ORDERS_NESTED_LINEITEMS = """
+oracle(
+    "orders_nested_lineitems",
+    """
     WITH nested AS (
       SELECT l_orderkey,
              list(struct_pack(ln := l_linenumber, qty := l_quantity)
@@ -441,104 +360,5 @@ _SQL_ORDERS_NESTED_LINEITEMS = """
            round(list_sum(list_transform(items, x -> x.qty)), 2) AS total_qty,
            array_to_string(list_transform(items, x -> x.ln::VARCHAR), ',') AS line_numbers
     FROM nested ORDER BY l_orderkey
-    """
-
-
-def _register() -> None:
-    from etl_instagram_spark.plans import llm_queries
-    from etl_instagram_spark.plans.oracle import (
-        SQL_CONDITIONAL_AGG_PROMO_SHARE,
-        SQL_ORDER_GAP_DAYS,
-        SQL_Q6_FORECAST_REVENUE,
-        SQL_TOP3_ORDERS_PER_CUSTOMER,
-    )
-
-    EXTRAS["supplier_geo_bands"] = (
-        _supplier_geo_bands,
-        llm_queries.SQL_SUPPLIER_GEO_BANDS,
-    )
-    EXTRAS["q6_forecast_revenue"] = (_q6_forecast_revenue, SQL_Q6_FORECAST_REVENUE)
-    EXTRAS["part_url_parse"] = (_part_url_parse, llm_queries.SQL_PART_URL_PARSE)
-    EXTRAS["conditional_agg_promo_share"] = (
-        _conditional_agg_promo_share,
-        SQL_CONDITIONAL_AGG_PROMO_SHARE,
-    )
-    EXTRAS["orders_profile"] = (_orders_profile, _sql_orders_profile())
-    EXTRAS["orders_above_customer_avg"] = (
-        _orders_above_customer_avg,
-        _SQL_ABOVE_CUST_AVG,
-    )
-    EXTRAS["customer_rank_distributions"] = (
-        _customer_rank_distributions,
-        _SQL_CUST_RANK_DIST,
-    )
-    # r8 rotation: LAG offset window (seat given to emb_kmeans_cells)
-    EXTRAS["order_gap_days"] = (_order_gap_days, SQL_ORDER_GAP_DAYS)
-    # r10 rotations (for graph_pagerank_suppliers, docs_dup_cluster_reps,
-    # docs_leakage_safe_split)
-    EXTRAS["top3_orders_per_customer"] = (
-        _top3_orders_per_customer,
-        SQL_TOP3_ORDERS_PER_CUSTOMER,
-    )
-    EXTRAS["nation_customer_listagg"] = (
-        _nation_customer_listagg,
-        llm_queries.SQL_NATION_CUSTOMER_LISTAGG,
-    )
-    EXTRAS["part_metrics_unpivot"] = (
-        _part_metrics_unpivot,
-        llm_queries.SQL_PART_METRICS_UNPIVOT,
-    )
-    # r11 rotation: quartile bucketing (seat given to part_entity_resolution)
-    EXTRAS["customer_revenue_quartiles"] = (
-        _customer_revenue_quartiles,
-        llm_queries.SQL_CUSTOMER_REVENUE_QUARTILES,
-    )
-    # r14 rotation: nested array-of-struct round trip (seat given to
-    # events_hll_distinct)
-    EXTRAS["orders_nested_lineitems"] = (
-        _orders_nested_lineitems,
-        _SQL_ORDERS_NESTED_LINEITEMS,
-    )
-    # r15 rotation: the spark.sql() front-door face (seat given to
-    # docs_kmv_shingle_overlap) — same shared ANSI text on both engines
-    from etl_instagram_spark.plans.q_relational import (
-        _SHARED_SQL_BRAND_REVENUE,
-        sql_brand_revenue,
-    )
-
-    EXTRAS["sql_brand_revenue"] = (sql_brand_revenue, _SHARED_SQL_BRAND_REVENUE)
-    # second r15 rotation: CUBE grouping sets (seat given to
-    # docs_bm25_indexed) — grouping-set machinery stays gated via
-    # events_hypertable_rollup
-    from etl_instagram_spark.plans.q_relational import (
-        _SQL_CUBE_RETURNFLAG_STATUS,
-        cube_returnflag_status,
-    )
-
-    EXTRAS["cube_returnflag_status"] = (
-        cube_returnflag_status,
-        _SQL_CUBE_RETURNFLAG_STATUS,
-    )
-    # r17 rotation: RANGE-frame rolling window (seat given to
-    # docs_weighted_sample) — value-based frame machinery stays gated
-    # via events_hypertable_rollup / events_asof_join
-    from etl_instagram_spark.plans.q_relational import (
-        SQL_CUSTOMER_ROLLING_30D_REVENUE,
-    )
-
-    EXTRAS["customer_rolling_30d_revenue"] = (
-        _customer_rolling_30d_revenue,
-        SQL_CUSTOMER_ROLLING_30D_REVENUE,
-    )
-    # r18 rotation: seat given to graph_node2vec_embeddings_97q1
-    from etl_instagram_spark.plans.q_relational import (
-        SQL_NATION_CUSTOMERS_SUPPLIERS_FULL,
-    )
-
-    EXTRAS["nation_customers_suppliers_full"] = (
-        _nation_customers_suppliers_full,
-        SQL_NATION_CUSTOMERS_SUPPLIERS_FULL,
-    )
-
-
-_register()
+    """,
+)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from etl_instagram_spark.functions.text import hash32_sql
+from etl_instagram_spark.plans.queries import _REGISTRY, QueryFn, all_queries
 
 _ORACLE: dict[str, "str | Callable[[], str]"] = {}
 
@@ -34,21 +35,35 @@ SQL_REVENUE_DEC = sql_revenue_dec()
 
 def oracle(name: str, sql: "str | Callable[[], str]") -> None:
     """Register oracle SQL for a query — either the string itself or a
-    zero-arg callable resolved (once, then cached) at ``all_oracle_sql``
-    time. The lazy form exists for oracles whose literals must be FIT
+    zero-arg callable resolved when read (``all_oracle_sql`` caches the
+    gate rows' results). The lazy form exists for oracles whose literals must be FIT
     from the gate data (e.g. IVF centroids): building them at import
     time would read parquet on every ``import etl_instagram_spark``."""
     _ORACLE[name] = sql
 
 
 def all_oracle_sql() -> dict[str, str]:
+    """Oracle SQL of the gate rows; only their lazy mirrors are resolved."""
+    gate = all_queries()
     out: dict[str, str] = {}
     for name, sql in _ORACLE.items():
+        if name not in gate:
+            continue
         if callable(sql):
             sql = sql()
             _ORACLE[name] = sql
         out[name] = sql
     return out
+
+
+def rotated_queries() -> dict[str, "tuple[QueryFn, str | Callable[[], str] | None]"]:
+    """The non-gate rows as name -> (fn, sql). ``sql`` is returned as
+    registered: a string, or a lazy callable the caller resolves."""
+    return {
+        name: (fn, _ORACLE.get(name))
+        for name, (fn, gate) in _REGISTRY.items()
+        if not gate
+    }
 
 
 oracle(
@@ -82,8 +97,9 @@ oracle(
     """,
 )
 
-# (q6_forecast_revenue rotated to plans/parity_extras.py in r6)
-SQL_Q6_FORECAST_REVENUE = """
+oracle(
+    "q6_forecast_revenue",
+    """
     SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
                           * CAST(l_discount AS DECIMAL(4,2))), 2) AS DOUBLE) AS revenue
     FROM lineitem
@@ -91,7 +107,8 @@ SQL_Q6_FORECAST_REVENUE = """
       AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
-    """
+    """,
+)
 
 oracle(
     "events_hypertable_rollup",
@@ -174,12 +191,9 @@ oracle(
     """,
 )
 
-# (customers_without_urgent_orders oracle moved to plans/parity_extras.py
-# with the query's r6 gate rotation)
-
-# (top3_orders_per_customer rotated to plans/parity_extras.py in r10,
-# for docs_dup_cluster_reps)
-SQL_TOP3_ORDERS_PER_CUSTOMER = """
+oracle(
+    "top3_orders_per_customer",
+    """
     SELECT o_custkey, o_orderkey,
            round(o_totalprice, 2) AS o_totalprice,
            rank_in_customer
@@ -191,11 +205,12 @@ SQL_TOP3_ORDERS_PER_CUSTOMER = """
     )
     WHERE rank_in_customer <= 3
     ORDER BY o_custkey, rank_in_customer
-    """
+    """,
+)
 
-# (order_gap_days rotated to plans/parity_extras.py in r8, for
-# emb_kmeans_cells)
-SQL_ORDER_GAP_DAYS = """
+oracle(
+    "order_gap_days",
+    """
     SELECT o_custkey, o_orderkey,
            datediff('day',
                     lag(CAST(o_orderdate AS DATE)) OVER (PARTITION BY o_custkey
@@ -203,10 +218,8 @@ SQL_ORDER_GAP_DAYS = """
                     CAST(o_orderdate AS DATE)) AS gap_days
     FROM orders WHERE o_custkey < 50
     ORDER BY o_custkey, o_orderkey
-    """
-
-# (events_sessionization oracle moved to plans/parity_extras.py with the
-# query's r6 gate rotation)
+    """,
+)
 
 oracle(
     "events_asof_join",
@@ -266,8 +279,9 @@ oracle(
     """,
 )
 
-# (conditional_agg_promo_share rotated to plans/parity_extras.py in r6)
-SQL_CONDITIONAL_AGG_PROMO_SHARE = """
+oracle(
+    "conditional_agg_promo_share",
+    """
     SELECT round(
              CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
                       THEN CAST(l_extendedprice AS DECIMAL(18,2))
@@ -277,4 +291,5 @@ SQL_CONDITIONAL_AGG_PROMO_SHARE = """
                         * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) * 100,
              4) AS promo_share_pct
     FROM lineitem JOIN part ON l_partkey = p_partkey
-    """
+    """,
+)

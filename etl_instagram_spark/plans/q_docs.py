@@ -1,5 +1,4 @@
-"""Document text-analysis and dedup-family gate queries (split from
-llm_queries.py in r14, zero behavior change): token stats, language mix,
+"""Document text-analysis and dedup-family queries: token stats, language mix,
 quality, BPE, fingerprints, MinHash/SimHash near-dup, exact/ngram-
 Jaccard dedup, duplicate-cluster reps, BM25, and heavy hitters, each
 with its DuckDB oracle."""
@@ -18,6 +17,7 @@ from etl_instagram_spark.plans.q_shared import (
     _spread,
     _sql_cc_rounds,
     _sql_detect_language,
+    oracle_parquet,
 )
 
 
@@ -95,9 +95,7 @@ oracle(
 # ---------------------------------------------------------------------------
 
 
-# (docs_quality_bands rotated out of the gate in r6 to make room for
-# docs_bpe_tokens — quality scoring stays gated via docs_gopher_filter's
-# nine-rule profile; parity in plans/parity_extras.py)
+@query("docs_quality_bands", gate=False)
 def docs_quality_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter profile: docs per score band (the distribution a
     training-data filter thresholds against)."""
@@ -138,8 +136,9 @@ round(
   4)
 """
 
-# (docs_quality_bands rotated to plans/parity_extras.py in r6)
-SQL_DOCS_QUALITY_BANDS = f"""
+oracle(
+    "docs_quality_bands",
+    f"""
     WITH t AS (SELECT text, {SQL_TOKS} AS toks FROM documents),
          s AS (SELECT {_SQL_QUALITY} AS q FROM t)
     SELECT CASE WHEN q < 0.25 THEN 'q0_low'
@@ -150,7 +149,8 @@ SQL_DOCS_QUALITY_BANDS = f"""
            round(CAST(sum(CAST(q AS DECIMAL(14,4))) AS DOUBLE) / count(*), 4)
              AS avg_score
     FROM s GROUP BY band ORDER BY band
-    """
+    """,
+)
 
 
 _BPE_N_MERGES = 24
@@ -197,8 +197,6 @@ def _bpe_fit_word_map() -> tuple[str, str]:
     inline word→token-count VALUES list every BPE mirror joins against.
     Asserts the cap covered the full distinct-word inventory (true at
     gate scale by construction)."""
-    import os
-
     import duckdb
 
     from etl_instagram_spark.operators.tokenizer import (
@@ -207,8 +205,7 @@ def _bpe_fit_word_map() -> tuple[str, str]:
         learn_bpe,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "documents.parquet")
+    path = oracle_parquet("documents")
     con = duckdb.connect()
     split = f"string_split_regex(lower(text), '{WORD_SPLIT_REGEX}')"
     freqs = con.sql(
@@ -358,13 +355,6 @@ MINHASH_BANDS = 4  # rows-per-band = 2
 # between Spark, the oracle, and the dedup operators themselves
 
 
-# (docs_minhash_bands rotated out of the gate in r6 to make room for
-# docs_heavy_hitters / docs_ngram_jaccard — the banding machinery stays
-# gated end-to-end via docs_near_dedup_summary, which replays signature →
-# bands → candidates → verify; DuckDB parity retained in
-# plans/parity_extras.py)
-
-
 def _sql_minhash_sig() -> str:
     perms = ", ".join(
         f"list_min(list_transform(hs, h -> ({a} * (h % {T.HASH_PRIME}) + {b}) % {T.HASH_PRIME}))"
@@ -380,9 +370,8 @@ def _sql_band_hashes() -> str:
 
 
 def _sql_minhash_bands() -> str:
-    """The rotated docs_minhash_bands oracle, kept here (next to the
-    fragment generators it shares with docs_near_dedup_summary) for
-    plans/parity_extras.py."""
+    """The docs_minhash_bands oracle (extras_docs.py), kept here next to
+    the fragment generators it shares with docs_near_dedup_summary."""
     return f"""
     WITH t AS (SELECT trim(lower(text)) AS norm, {SQL_TOKS} AS toks FROM documents),
          s AS (SELECT CASE WHEN len(toks) < 3 THEN [norm]
@@ -535,10 +524,7 @@ oracle("docs_bm25_topk", _sql_bm25_topk())
 @query("docs_bm25_indexed")
 def docs_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MANY-QUERIES inverted-index BM25 face (operators/retrieval.
-    build_bm25_index + bm25_topk_indexed; promoted from EXTRAS at the
-    second r15 rotation — the seat given by cube_returnflag_status,
-    whose CUBE/grouping-set machinery stays gated via
-    events_hypertable_rollup and parity-checked in EXTRAS). Same terms,
+    build_bm25_index + bm25_topk_indexed). Same terms,
     same k as the scan-path docs_bm25_topk, and by the fixed-order
     score fold the EXACT same rows and 6-dp scores — so the oracle IS
     the scan path's SQL replay: one cross-engine statement certifies
@@ -659,12 +645,7 @@ def _sql_simhash32(hs_expr: str) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
-# (docs_simhash rotated out of the gate in r13 to make room for
-# events_cm_frequency — the near-dup family stays gated via
-# docs_near_dedup_summary and emb_near_dedup (docs_ngram_jaccard until
-# its own r14 rotation), and the per-row hash-expression shape via
-# docs_fingerprint_profile; still cross-engine-checked every round
-# through plans/parity_extras.py)
+@query("docs_simhash", gate=False)
 def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash values for the first 100 docs — near-identical docs differ
     in few bits (docs_minhash_bands' sibling signal; pairing strategy
@@ -679,7 +660,9 @@ def docs_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-SQL_DOCS_SIMHASH = f"""
+oracle(
+    "docs_simhash",
+    f"""
     WITH t AS (SELECT doc_id, {SQL_TOKS} AS toks
                FROM documents WHERE doc_id < 100),
          h AS (SELECT doc_id,
@@ -690,7 +673,8 @@ SQL_DOCS_SIMHASH = f"""
            {_sql_simhash32('lo_h')} AS sim_lo,
            {_sql_simhash32('hi_h')} AS sim_hi
     FROM h ORDER BY doc_id
-    """
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -742,12 +726,7 @@ oracle(
 # ---------------------------------------------------------------------------
 
 
-# (docs_ngram_jaccard rotated out of the gate in r14 to make room for
-# events_dcm_quantiles — the near-dup family stays gated via
-# docs_near_dedup_summary and emb_near_dedup, which cover the banding,
-# signature, and survivor kernels; the prefix-filtered exact-Jaccard
-# join stays cross-engine-checked every round through
-# plans/parity_extras.py)
+@query("docs_ngram_jaccard", gate=False)
 def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/dedup.jaccard_join at τ=0.5: every document pair with
     exact 3-gram Jaccard ≥ 0.5, with the similarity value. The Spark side
@@ -764,7 +743,9 @@ def docs_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-SQL_DOCS_NGRAM_JACCARD = f"""
+oracle(
+    "docs_ngram_jaccard",
+    f"""
     WITH t AS (SELECT doc_id, trim(lower(text)) AS norm, {SQL_TOKS} AS toks
                FROM documents),
          s AS (SELECT doc_id,
@@ -780,7 +761,8 @@ SQL_DOCS_NGRAM_JACCARD = f"""
     SELECT id_a, id_b, round(j, 4) AS jaccard
     FROM pairs WHERE j >= 0.5
     ORDER BY id_a, id_b
-    """
+    """,
+)
 
 
 @query("docs_dup_cluster_reps")
@@ -895,8 +877,7 @@ def _docs_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("docs_kmv_shingle_overlap")
 def docs_kmv_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV set-overlap sketches (operators/kmv.py; promoted from EXTRAS
-    at the r15 rotation — the seat given by sql_brand_revenue) — for
+    """KMV set-overlap sketches (operators/kmv.py) — for
     every unordered pair of sources, the estimated distinct-shingle
     union / Jaccard / intersection from the two k-minimum-value
     synopses, with the EXACT intersection and union as data contrast.
@@ -996,15 +977,14 @@ oracle("docs_kmv_shingle_overlap", _sql_docs_kmv_shingle_overlap)
 
 
 # ---------------------------------------------------------------------------
-# weighted priority sampling (operators/kmv.py) — promoted to the gate in
-# r17 (customer_rolling_30d_revenue rotated to plans/extras_relational.py)
+# weighted priority sampling (operators/kmv.py)
 # ---------------------------------------------------------------------------
 
 
 @query("docs_weighted_sample")
 def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duffield–Lund–Thorup priority sampling (operators/kmv.
-    kmv_weighted_sample), driver-certified at the r17 rotation: a
+    kmv_weighted_sample), driver-certified: a
     deterministic fixed-SIZE sample of 48 doc_ids per lang drawn with
     probability increasing in n_chars, plus the subset-sum estimator
     column (est_weight = max(w, τ-reciprocal)). Every sf0.01 lang holds

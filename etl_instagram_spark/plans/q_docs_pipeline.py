@@ -1,5 +1,4 @@
-"""Corpus-pipeline gate queries (split from llm_queries.py in r14, zero
-behavior change): hash splits, mixtures, boilerplate, domain caps,
+"""Corpus-pipeline queries: hash splits, mixtures, boilerplate, domain caps,
 Gopher quality, packing, PII, decontamination, chunking, and leakage-
 safe splitting, each with its DuckDB oracle."""
 
@@ -246,12 +245,7 @@ oracle(
 # ---------------------------------------------------------------------------
 
 
-# (docs_domain_cap rotated out of the gate at the r16 rotation — seat
-# given to graph_walk_embeddings in plans/q_graph.py. The hashed-rank
-# cap machinery stays gated via docs_hash_split_sample (same bucket_sql
-# hash kernel) and docs_corpus_mixture (the cap/mixture family); the
-# exact query keeps driver-grade value+type parity in
-# plans/extras_docs.py.)
+@query("docs_domain_cap", gate=False)
 def docs_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators/sampling.cap_per_group: keep at most 15 docs per source
     (uniform deterministic preference — hashed-id rank), then audit the
@@ -286,8 +280,7 @@ def _sql_domain_cap() -> str:
     """
 
 
-# (oracle registration moved to plans/extras_docs.py with the r16
-# rotation — _sql_domain_cap stays here beside the query it mirrors)
+oracle("docs_domain_cap", _sql_domain_cap)
 
 
 # ---------------------------------------------------------------------------
@@ -869,8 +862,7 @@ oracle(
 
 
 # ---------------------------------------------------------------------------
-# leakage-safe corpus splitting — promoted to the gate in r10
-# (part_metrics_unpivot rotated to plans/parity_extras.py)
+# leakage-safe corpus splitting
 # ---------------------------------------------------------------------------
 
 _LEAK_WEIGHTS = {"train": 0.9, "val": 0.05, "test": 0.05}

@@ -1,5 +1,4 @@
-"""Embedding-family gate queries (split from llm_queries.py in r14, zero
-behavior change): cosine kNN, hyperplane-LSH / IVF / PQ ANN with
+"""Embedding-family queries: cosine kNN, hyperplane-LSH / IVF / PQ ANN with
 measured recall, semantic dedup, cross-modal joins, kNN-join recall, and
 certified iterative k-means, each with its DuckDB oracle."""
 
@@ -19,13 +18,11 @@ from etl_instagram_spark.plans.q_shared import (
     _as_double,
     _dot,
     _spread,
+    oracle_parquet,
 )
 
 
-# (emb_knn_cosine rotated out of the gate in r6 to make room for
-# emb_semantic_dedup — the exact-cosine surface stays gated via the
-# ground-truth sides of emb_ann_recall / emb_knn_join_recall; this
-# single-query shape keeps DuckDB parity via plans/parity_extras.py)
+@query("emb_knn_cosine", gate=False)
 def emb_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force top-10 cosine neighbors of vec_id=0. One scan, the
     query vector broadcast as a 1-row dimension, TakeOrderedAndProject —
@@ -58,6 +55,9 @@ SQL_KNN_COSINE = """
     ORDER BY cos_sim DESC, vec_id
     LIMIT 10
     """
+
+
+oracle("emb_knn_cosine", SQL_KNN_COSINE)
 
 
 # ---------------------------------------------------------------------------
@@ -110,12 +110,6 @@ def _sql_bucket() -> str:
 # (the per-vector bucket computation itself is oracle-replayed inside
 # emb_ann_lsh_topk and emb_ann_recall — a separate histogram query added
 # no new checked surface)
-
-
-# (emb_ann_lsh_topk rotated out of the gate in r6 to make room for
-# emb_knn_join_recall — the bucket-filtered top-k path stays gated via
-# emb_ann_recall and the new self-join recall query; DuckDB parity
-# retained in plans/parity_extras.py via _sql_ann_lsh_topk below)
 
 
 def _sql_ann_lsh_topk() -> str:
@@ -316,12 +310,7 @@ def _recall_pairs(emb: DataFrame, q: DataFrame, extra: dict[str, Column]) -> Dat
     )
 
 
-# (emb_ann_recall rotated out of the gate in r13 to make room for
-# events_funnel_levels — the ANN family stays gated via
-# emb_ann_ivf_stored, emb_pq_recall, and emb_knn_join_recall, which
-# cover the same hyperplane/quantizer kernels, recall scoring, and
-# window-ranked ground truth; still cross-engine-checked every round
-# through plans/parity_extras.py)
+@query("emb_ann_recall", gate=False)
 def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of multi-probe hyperplane-LSH ANN against the exact
     cosine top-10, for 5 query vectors × probe radii Hamming ≤ {1, 2} at
@@ -381,7 +370,9 @@ def emb_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_EMB_ANN_RECALL = f"""
+oracle(
+    "emb_ann_recall",
+    f"""
     WITH b AS (SELECT vec_id, embedding, {_sql_bucket()} AS bucket FROM embeddings),
          q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, bucket AS qbucket
                FROM b WHERE vec_id < 5),
@@ -407,14 +398,11 @@ SQL_EMB_ANN_RECALL = f"""
     SELECT qid, probe_hamming, round(sum(coalesce(hit, 0)) / 10.0, 2) AS recall_at_10
     FROM gt LEFT JOIN ann USING (qid, probe_hamming, vec_id)
     GROUP BY qid, probe_hamming ORDER BY qid, probe_hamming
-    """
+    """,
+)
 
 
-# (emb_ann_ivf_recall rotated out of the gate in r9 to make room for
-# emb_ann_ivf_stored — the stored-index variant exercises the same
-# quantizer, probe sets, and ranking PLUS the ingest-time cell stamp and
-# partition-pruned scan; the recall formulation keeps driver-grade
-# DuckDB parity in plans/parity_extras.py)
+@query("emb_ann_ivf_recall", gate=False)
 def emb_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of IVF ANN (seeded NumPy-Lloyd's coarse quantizer,
     probe the 2 nearest of 8 cells) against the exact cosine top-10,
@@ -496,15 +484,12 @@ def _fit_oracle_centroids(n_clusters: int = 8, seed: int = 42):
     ``SPARK_GRAFT_ORACLE_SF_DIR`` at that directory. Returns
     (centroids, duckdb_connection, parquet_path) so callers can issue
     follow-up probes on the same data before closing."""
-    import os
-
     import duckdb
     import numpy as np
 
     from etl_instagram_spark.operators.similarity import lloyd_kmeans
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "embeddings.parquet")
+    path = oracle_parquet("embeddings")
     con = duckdb.connect()
     sample = con.sql(
         f"SELECT embedding::DOUBLE[] AS v FROM '{path}' "
@@ -538,8 +523,8 @@ def _sql_centroid_dists(centroids: list[list[float]]) -> str:
 
 
 def _ivf_oracle_sql() -> str:
-    """DuckDB mirror of emb_ann_ivf_recall, built LAZILY (resolved at
-    ``all_oracle_sql()`` time, not import time) because its literals are
+    """DuckDB mirror of emb_ann_ivf_recall, built LAZILY (resolved when
+    the oracle is read, not at import time) because its literals are
     FIT from the gate data (``_fit_oracle_centroids``), the way
     ``_sql_bucket()`` inlines the hyperplane constants. Cell assignment
     replays as argmin over a distance array (``_sql_centroid_dists``);
@@ -593,6 +578,9 @@ def _ivf_oracle_sql() -> str:
     FROM gt LEFT JOIN ann USING (qid, vec_id)
     GROUP BY qid ORDER BY qid
     """
+
+
+oracle("emb_ann_ivf_recall", _ivf_oracle_sql)
 
 
 @query("emb_ann_ivf_stored")
@@ -807,8 +795,6 @@ def _pq_oracle_sql() -> str:
     engines rank by bit-identical doubles and the code assignment agrees
     by construction on any data. The ADC sum indexes the same LUT
     literals left-to-right, so it is bit-identical too."""
-    import os
-
     import duckdb
     import numpy as np
 
@@ -817,8 +803,7 @@ def _pq_oracle_sql() -> str:
         pq_lut,
     )
 
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "embeddings.parquet")
+    path = oracle_parquet("embeddings")
     con = duckdb.connect()
     sample = con.sql(
         f"SELECT embedding::DOUBLE[] AS v FROM '{path}' "
@@ -1059,8 +1044,7 @@ oracle(
 
 
 # ---------------------------------------------------------------------------
-# distributed k-means (operators/clustering.py) — promoted to the gate in r8
-# (order_gap_days rotated to plans/parity_extras.py)
+# distributed k-means (operators/clustering.py)
 # ---------------------------------------------------------------------------
 
 _KMEANS_K, _KMEANS_ITERS = 8, 2
@@ -1106,8 +1090,6 @@ def _kmeans_oracle_sql() -> str:
     same Python ``(sum/scale)/n`` update the Spark driver does; the
     returned SQL profiles the final centroids' cells with the identical
     micro-unit SSE sum the Spark side publishes."""
-    import os
-
     import duckdb
     import numpy as np
 
@@ -1115,8 +1097,7 @@ def _kmeans_oracle_sql() -> str:
     from etl_instagram_spark.operators.similarity import lloyd_kmeans
 
     scale = 10**QUANT_DP
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = os.path.join(sf_dir, "embeddings.parquet")
+    path = oracle_parquet("embeddings")
     con = duckdb.connect()
     sample = con.sql(
         f"SELECT embedding::DOUBLE[] FROM '{path}' "

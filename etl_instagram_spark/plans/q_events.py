@@ -1,5 +1,4 @@
-"""Events-family gate queries (split from llm_queries.py in r14, zero
-behavior change): exact percentiles, native session windows, the count-
+"""Events-family queries: exact percentiles, native session windows, the count-
 min frequency sketch, the behavioral funnel, and the dyadic-CM quantile
 sketch, each with its DuckDB oracle."""
 
@@ -102,15 +101,13 @@ oracle(
 
 
 # ---------------------------------------------------------------------------
-# r13 gate promotions: the driver now certifies the sketch and behavioral
-# families directly (seats from docs_simhash and emb_ann_recall, both of
-# which keep full parity in plans/parity_extras.py)
+# sketch and behavioral families: count-min frequency, funnel
 # ---------------------------------------------------------------------------
 
 
 @query("events_cm_frequency")
 def events_cm_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated r13 (EXTRAS since r11): count-min point-frequency sketch
+    """Count-min point-frequency sketch
     (operators/sketches.cm_sketch/cm_lookup) — per-event-type user
     frequencies at a deliberately narrow width (w=256 forces real
     collisions), probed for every (type, user) pair with the exact
@@ -174,7 +171,7 @@ FUNNEL_WINDOW_S = 7 * 24 * 3600
 
 @query("events_funnel_levels")
 def events_funnel_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated r13 (EXTRAS since r10): earliest-anchor view→click→purchase
+    """Earliest-anchor view→click→purchase
     funnel within 7 days (operators/funnel.py) — per-level
     reached/stopped counts and mean seconds-to-depth, all replayed in
     SQL. Semantics pinned precisely because engines disagree
@@ -233,15 +230,13 @@ oracle("events_funnel_levels", SQL_FUNNEL_LEVELS)
 
 
 # ---------------------------------------------------------------------------
-# r14 gate promotion: the driver now certifies the QUANTILE face of the
-# sketch family directly (seat from docs_ngram_jaccard, which keeps full
-# parity in plans/parity_extras.py)
+# sketch family, quantile and distinct-count faces
 # ---------------------------------------------------------------------------
 
 
 @query("events_dcm_quantiles")
 def events_dcm_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated r14 (EXTRAS since r13): dyadic count-min QUANTILE sketch
+    """Dyadic count-min QUANTILE sketch
     (operators/sketches.dcm_sketch/dcm_quantiles, the r12 addition) —
     per-event-type value quantiles (p25/p50/p75/p95) answered from the
     ≤ d·w·b-row register state alone via the b-round integer bit
@@ -338,7 +333,7 @@ oracle("events_dcm_quantiles", _sql_events_dcm_quantiles())
 
 @query("events_hll_distinct")
 def events_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gated r14 (EXTRAS since r10): HyperLogLog distinct event_ids per
+    """HyperLogLog distinct event_ids per
     event_type (operators/sketches.py) with the exact count as contrast
     — register state (buckets_hit), the EXACT integer harmonic sum, and
     the raw estimate all replay bit-for-bit in DuckDB; the sketch uses

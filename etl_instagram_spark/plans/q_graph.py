@@ -1,5 +1,4 @@
-"""Graph/entity-family gate queries (split from llm_queries.py in r14, zero
-behavior change): int64-exact PageRank over the supplier graph and
+"""Graph/entity-family queries: int64-exact PageRank over the supplier graph and
 blocking+levenshtein+CC entity resolution, each with its DuckDB oracle
 (fixed-round MATERIALIZED CTE replays with loud convergence asserts)."""
 
@@ -16,8 +15,7 @@ from etl_instagram_spark.plans.q_shared import (
 
 
 # ---------------------------------------------------------------------------
-# graph centrality (operators/graph.py) — promoted to the gate in r10
-# (nation_customer_listagg rotated to plans/parity_extras.py)
+# graph centrality (operators/graph.py)
 # ---------------------------------------------------------------------------
 
 
@@ -73,9 +71,8 @@ oracle("graph_pagerank_suppliers", _pagerank_oracle_sql())
 def part_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution over part names (operators/entity.py) — block
     on the name's last token, verify with levenshtein ≤ 3, cluster with
-    connected components, emit the per-entity merge audit. Promoted
-    from EXTRAS to the gate in r11 so the driver certifies the ER
-    family directly; the oracle replays blocking, the edit-distance
+    connected components, emit the per-entity merge audit. The oracle
+    replays blocking, the edit-distance
     verify (levenshtein is a built-in with identical integer semantics
     in both engines), AND the convergence-asserted CC rounds in one
     DuckDB statement."""
@@ -125,8 +122,7 @@ oracle("part_entity_resolution", _sql_part_entity_resolution())
 
 
 # ---------------------------------------------------------------------------
-# graph representation learning (operators/graph_embed.py) — promoted to
-# the gate in r16 (docs_domain_cap rotated to plans/extras_docs.py)
+# graph representation learning (operators/graph_embed.py)
 # ---------------------------------------------------------------------------
 
 
@@ -152,8 +148,8 @@ _WALK_EDGES_97Q1_SQL = f"""
 
 @query("graph_walk_embeddings")
 def graph_walk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full graph-representation chain, driver-certified (promoted
-    from EXTRAS at the r16 rotation): deterministic walks over the
+    """The full graph-representation chain, driver-certified:
+    deterministic walks over the
     1997Q1 customer↔supplier interaction graph → skip-gram
     co-occurrence (window 2) → PPMI → ±1 random-projection embeddings
     (dim 8, L2-normalized) — walks + co-occurrence + PPMI + projection
@@ -229,10 +225,7 @@ oracle("graph_walk_embeddings", _sql_graph_walk_embeddings())
 
 
 # ---------------------------------------------------------------------------
-# second-order (node2vec) representation learning — promoted to the gate
-# in r18 (nation_customers_suppliers_full rotated to
-# plans/extras_relational.py); built and parity-proven ahead of the
-# rotation as an EXTRAS row in r17 (plans/extras_graph.py history)
+# second-order (node2vec) representation learning
 # ---------------------------------------------------------------------------
 
 
@@ -240,16 +233,16 @@ oracle("graph_walk_embeddings", _sql_graph_walk_embeddings())
 def graph_node2vec_embeddings_97q1(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The BOUNDED node2vec embedding chain, driver-certified (promoted
-    from EXTRAS at the r18 rotation): second-order biased walks
+    """The BOUNDED node2vec embedding chain, driver-certified:
+    second-order biased walks
     (Grover & Leskovec KDD'16; α ratio 1:1:2, hub cap 32) over the
     1997Q1 customer↔supplier subgraph → skip-gram co-occurrence
     (window 2) → PPMI → ±1 random-projection embeddings (dim 8,
     L2-normalized). Same bounding precedent as graph_walk_embeddings:
     the gate certifies the operator chain, not the full-graph corpus —
-    the FULL-graph chain stays in EXTRAS (graph_node2vec_embeddings)
-    and the walk corpus itself in graph_node2vec_walks, both
-    value-parity-kept. Every count is int64 and the one ln boundary is
+    the FULL-graph chain (graph_node2vec_embeddings) and the walk
+    corpus itself (graph_node2vec_walks) are non-gate rows in
+    plans/extras_graph.py. Every count is int64 and the one ln boundary is
     quantized at 10^-6, so the top-50 nodes' embedding floats replay
     bit-for-bit in one DuckDB statement.
 

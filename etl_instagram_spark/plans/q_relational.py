@@ -1,5 +1,4 @@
-"""Relational-family gate queries (split from llm_queries.py in r14, zero
-behavior change): nested/windowed order analytics, scalar-function
+"""Relational-family queries: nested/windowed order analytics, scalar-function
 surfaces, cube/listagg/unpivot shapes, and the full-join + rolling-
 window customer views, each with its DuckDB oracle."""
 
@@ -10,13 +9,6 @@ from pyspark.sql import functions as F
 
 from etl_instagram_spark.plans.oracle import oracle, sql_revenue_dec
 from etl_instagram_spark.plans.queries import _t, query
-
-
-# orders_nested_lineitems (nested array-of-struct round trip, F14/F15)
-# lived here since r6; its gate seat went to events_hll_distinct in r14
-# — full value parity continues in plans/extras_relational.py, and the
-# nested/HOF surface stays gated via events_json_extract (from_json /
-# element_at) and docs_chunking (explode of computed arrays).
 
 
 # ---------------------------------------------------------------------------
@@ -101,9 +93,7 @@ oracle(
 # ---------------------------------------------------------------------------
 
 
-# (part_url_parse rotated out of the gate in r6 to make room for
-# docs_bm25_topk — the F10 parse surface keeps DuckDB parity via
-# plans/parity_extras.py and its projection pytest coverage)
+@query("part_url_parse", gate=False)
 def part_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL origin/path/query parsing (F10, elimparcial.js:16 getImageURL
     origin logic) via parse_url — mirrored in the oracle with regexes."""
@@ -125,7 +115,9 @@ def part_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-SQL_PART_URL_PARSE = """
+oracle(
+    "part_url_parse",
+    """
     WITH u AS (
       SELECT p_partkey,
              'https://cdn.example/' || lower(regexp_replace(p_brand, '[^A-Za-z0-9]', '', 'g'))
@@ -137,12 +129,8 @@ SQL_PART_URL_PARSE = """
            regexp_extract(url, '^https?://[^/]+([^?]*)', 1) AS path,
            regexp_extract(url, '[?&]size=([^&]*)', 1) AS size_param
     FROM u ORDER BY p_partkey
-    """
-
-
-# ---------------------------------------------------------------------------
-# lineitem: deterministic hash-based sampling (F17's reproducibility)
-# ---------------------------------------------------------------------------
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -150,9 +138,7 @@ SQL_PART_URL_PARSE = """
 # ---------------------------------------------------------------------------
 
 
-# (supplier_geo_bands rotated out of the gate in r6 to make room for
-# docs_domain_cap — the haversine/trig surface keeps DuckDB parity via
-# plans/parity_extras.py; functions/geo.py keeps its pytest coverage)
+@query("supplier_geo_bands", gate=False)
 def supplier_geo_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Haversine distance bands from synthetic supplier coordinates
     (derived deterministically from the key) to a fixed origin — the geo
@@ -172,7 +158,9 @@ def supplier_geo_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_SUPPLIER_GEO_BANDS = """
+oracle(
+    "supplier_geo_bands",
+    """
     WITH pts AS (
       SELECT (s_suppkey % 120) - 60 + 0.25 AS lat,
              (s_suppkey * 7 % 360) - 180 + 0.5 AS lng
@@ -189,17 +177,8 @@ SQL_SUPPLIER_GEO_BANDS = """
     SELECT CAST(floor(dist / 2000) AS INT) AS band_2000km,
            count(*) AS n_suppliers
     FROM d GROUP BY band_2000km ORDER BY band_2000km
-    """
-
-
-# ---------------------------------------------------------------------------
-# documents: per-doc top_terms kernel, flattened for the oracle
-# ---------------------------------------------------------------------------
-
-
-# (docs_top_terms_per_doc rotated out of the gate in r6 — the identical
-# stemmer/stopword/top-terms path stays gated via docs_top_terms_by_lang;
-# the per-doc shape keeps DuckDB parity in plans/parity_extras.py)
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -211,13 +190,11 @@ SQL_SUPPLIER_GEO_BANDS = """
 # per-operator checksums — by orders_set_ops in plans/queries.py)
 
 
+@query("cube_returnflag_status", gate=False)
 def cube_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all grouping-set combinations
     in one pass (Catalyst Expand — one shuffle regardless of the number
-    of grouping sets). Rotated to EXTRAS at the second r15 rotation
-    (seat given to docs_bm25_indexed); grouping-set machinery stays
-    gated via events_hypertable_rollup, and this exact query keeps
-    value parity every round via tests/test_rotated_parity.py."""
+    of grouping sets)."""
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -232,14 +209,17 @@ def cube_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_CUBE_RETURNFLAG_STATUS = """
+oracle(
+    "cube_returnflag_status",
+    """
     SELECT l_returnflag, l_linestatus,
            count(*) AS n_items,
            round(sum(l_quantity), 2) AS sum_qty
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
     ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-    """
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -258,18 +238,20 @@ _SHARED_SQL_BRAND_REVENUE = f"""
 """
 
 
+@query("sql_brand_revenue", gate=False)
 def sql_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's SQL front door: register the test tables as temp
     views and run the EXACT same ANSI text the oracle runs — one string,
     two engines. Catalyst's planning (broadcast part-side, partial agg)
-    is identical to the DataFrame version of this query. Rotated to
-    EXTRAS at the r15 rotation (seat given to docs_kmv_shingle_overlap);
-    value parity and the broadcast plan pin continue every round via
-    tests/test_rotated_parity.py and test_plan_invariants.py."""
+    is identical to the DataFrame version of this query; its broadcast
+    plan is pinned in tests/test_plan_invariants.py."""
     from etl_instagram_spark.sources.tables import register_views
 
     register_views(spark, sf_dir, names=("part", "lineitem"))
     return spark.sql(_SHARED_SQL_BRAND_REVENUE)
+
+
+oracle("sql_brand_revenue", _SHARED_SQL_BRAND_REVENUE)
 
 
 # ---------------------------------------------------------------------------
@@ -277,12 +259,10 @@ def sql_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@query("nation_customer_listagg", gate=False)
 def nation_customer_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String aggregation: first five customer names per nation,
-    deterministically sorted then joined — the listagg surface.
-    (r10 rotation: gate seat given to graph_pagerank_suppliers; this
-    keeps driver-grade DuckDB parity in plans/parity_extras.py, and
-    collect_list/sort_array stays gated via docs_top_terms_by_lang.)"""
+    deterministically sorted then joined — the listagg surface."""
     cu = _t(spark, sf_dir, "customer")
     return (
         cu.groupBy("c_nationkey")
@@ -296,19 +276,21 @@ def nation_customer_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_NATION_CUSTOMER_LISTAGG = """
+oracle(
+    "nation_customer_listagg",
+    """
     SELECT c_nationkey,
            count(*) AS n_customers,
            array_to_string((list(c_name ORDER BY c_name))[1:5], ',') AS first_names
     FROM customer GROUP BY c_nationkey ORDER BY c_nationkey
-    """
+    """,
+)
 
 
+@query("part_metrics_unpivot", gate=False)
 def part_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide → long): per-part numeric metrics as (metric, value)
-    rows — Catalyst Expand, one pass, no shuffle.
-    (r10 rotation: gate seat given to docs_leakage_safe_split; DuckDB
-    parity retained in plans/parity_extras.py.)"""
+    rows — Catalyst Expand, one pass, no shuffle."""
     pa = _t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 100)
     return (
         pa.select(
@@ -321,7 +303,9 @@ def part_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_PART_METRICS_UNPIVOT = """
+oracle(
+    "part_metrics_unpivot",
+    """
     SELECT p_partkey, metric, value
     FROM (SELECT p_partkey,
                  p_retailprice AS retailprice,
@@ -329,14 +313,11 @@ SQL_PART_METRICS_UNPIVOT = """
           FROM part WHERE p_partkey <= 100)
     UNPIVOT (value FOR metric IN (retailprice, size))
     ORDER BY p_partkey, metric
-    """
+    """,
+)
 
 
-# (nation_customers_suppliers_full rotated out of the gate in r18 to
-# make room for graph_node2vec_embeddings_97q1 — the full-outer
-# coalesce-both-sides machinery stays gated via q5's join tree and the
-# merge family's anti-joins, and the exact query keeps driver-grade
-# value parity in plans/extras_relational.py)
+@query("nation_customers_suppliers_full", gate=False)
 def nation_customers_suppliers_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER between two aggregates: nations ranked by customer and
     supplier counts, keeping nations present on either side only."""
@@ -357,7 +338,9 @@ def nation_customers_suppliers_full(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-SQL_NATION_CUSTOMERS_SUPPLIERS_FULL = """
+oracle(
+    "nation_customers_suppliers_full",
+    """
     WITH cu AS (SELECT c_nationkey AS nk, count(*) AS n_customers
                 FROM customer GROUP BY c_nationkey),
          su AS (SELECT s_nationkey AS nk, count(*) AS n_suppliers
@@ -367,7 +350,8 @@ SQL_NATION_CUSTOMERS_SUPPLIERS_FULL = """
            coalesce(n_suppliers, 0) AS n_suppliers
     FROM cu FULL OUTER JOIN su ON cu.nk = su.nk
     ORDER BY nationkey
-    """
+    """,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -375,11 +359,7 @@ SQL_NATION_CUSTOMERS_SUPPLIERS_FULL = """
 # ---------------------------------------------------------------------------
 
 
-# (customer_rolling_30d_revenue rotated out of the gate in r17 to make
-# room for docs_weighted_sample — the RANGE-frame window machinery stays
-# gated via events_hypertable_rollup's time buckets and the offset-window
-# family via events_asof_join, and the exact query keeps driver-grade
-# value parity in plans/extras_relational.py)
+@query("customer_rolling_30d_revenue", gate=False)
 def customer_rolling_30d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame rolling window: per customer, revenue in the 30 days
     up to each order (value-based frame, not row-based — late/sparse
@@ -402,7 +382,9 @@ def customer_rolling_30d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_custkey", "day_num", "o_orderkey")
 
 
-SQL_CUSTOMER_ROLLING_30D_REVENUE = """
+oracle(
+    "customer_rolling_30d_revenue",
+    """
     SELECT o_custkey, o_orderkey,
            datediff('day', DATE '1992-01-01', o_orderdate::DATE) AS day_num,
            round(sum(o_totalprice) OVER (
@@ -411,14 +393,11 @@ SQL_CUSTOMER_ROLLING_30D_REVENUE = """
              RANGE BETWEEN 30 PRECEDING AND CURRENT ROW), 2) AS rolling_30d_revenue
     FROM orders WHERE o_custkey <= 100
     ORDER BY o_custkey, day_num, o_orderkey
-    """
+    """,
+)
 
 
-# (customer_revenue_quartiles rotated out of the gate in r11 to make room
-# for part_entity_resolution — the percentile-boundary-broadcast shape
-# stays gated via events_value_percentiles, and bucketed top-k via
-# docs_bm25_topk; still cross-engine-checked every round through
-# plans/parity_extras.py)
+@query("customer_revenue_quartiles", gate=False)
 def customer_revenue_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue quartiles the scale-correct way: percentile BOUNDARIES
     (one tiny aggregate) broadcast into a CASE bucket assignment — no
@@ -452,7 +431,8 @@ def customer_revenue_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_CUSTOMER_REVENUE_QUARTILES = (
+oracle(
+    "customer_revenue_quartiles",
     """
     WITH per_cust AS (
       SELECT o_custkey, round(sum(o_totalprice), 2) AS revenue
@@ -473,5 +453,5 @@ SQL_CUSTOMER_REVENUE_QUARTILES = (
            round(min(revenue), 2) AS min_revenue,
            round(max(revenue), 2) AS max_revenue
     FROM bucketed GROUP BY quartile ORDER BY quartile
-    """
+    """,
 )

@@ -1,16 +1,24 @@
-"""Shared kernels for the per-family gate-query modules (split from
-llm_queries.py in r14, zero behavior change): the whitespace/token SQL
-mirrors, the language-marker detector, the deterministic small-file
+"""Shared kernels for the per-family query modules: the whitespace/token
+SQL mirrors, the language-marker detector, the deterministic small-file
 spread, vector column helpers, and the convergence-asserted connected-
 components CTE chain used by both the dedup and entity-resolution
 oracles."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_instagram_spark.functions import text as T
+
+
+def oracle_parquet(table: str) -> str:
+    """Parquet path the fit-from-data oracle mirrors read: ``table`` under
+    ``SPARK_GRAFT_ORACLE_SF_DIR``, default the driver gate's sf0.01."""
+    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    return os.path.join(sf_dir, f"{table}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -38,19 +38,25 @@ from etl_instagram_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-_REGISTRY: dict[str, QueryFn] = {}
+# name -> (fn, gate). Gate rows are the driver contract (exactly 50);
+# the rest keep the same DuckDB value check in tests/test_rotated_parity.py.
+# Every row pairs with one ``plans.oracle.oracle(name, sql)`` entry.
+_REGISTRY: dict[str, tuple[QueryFn, bool]] = {}
 
 
-def query(name: str) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, gate: bool = True) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        _REGISTRY[name] = fn
+        if name in _REGISTRY:
+            raise ValueError(f"query {name!r} registered twice")
+        _REGISTRY[name] = (fn, gate)
         return fn
 
     return deco
 
 
 def all_queries() -> dict[str, QueryFn]:
-    return dict(_REGISTRY)
+    """The gate rows only: the driver contract's query inventory."""
+    return {name: fn for name, (fn, gate) in _REGISTRY.items() if gate}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -128,10 +134,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (q6_forecast_revenue rotated out of the gate in r6 to make room for
-# docs_gopher_filter — the filter-and-global-agg surface stays gated via
-# q1_pricing_summary / conditional_agg_promo_share; DuckDB parity via
-# plans/parity_extras.py)
+@query("q6_forecast_revenue", gate=False)
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure filter + global agg — entirely pushdown-able;
     at scale this is a single scan with zero shuffle (partial sums only)."""
@@ -216,11 +219,6 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (pivot_returnflag_status rotated out of the 50-row gate in r6 — the
-# conditional-agg surface stays gated via docs_gopher_filter, and the
-# pivot plan itself keeps DuckDB parity in plans/parity_extras.py)
-
-
 # ---------------------------------------------------------------------------
 # Joins of every flavor (SURVEY §2.3)
 # ---------------------------------------------------------------------------
@@ -296,33 +294,15 @@ def q4_order_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (customers_without_urgent_orders rotated out of the gate in r6 to make
-# room for docs_heavy_hitters / docs_ngram_jaccard — the anti-join shape
-# stays pytest-covered via operators.merge.anti_join_new and the ingest
-# pipelines; DuckDB parity retained in plans/parity_extras.py)
-
-
-# (top10_customers_by_revenue rotated out of the gate in r6 — the same
-# join+agg+TakeOrderedAndProject shape stays gated via
-# q3_unshipped_revenue; DuckDB parity retained in plans/parity_extras.py)
-
-
-# (the left/right-outer join surface is exercised — and oracle-gated —
-# by nation_customers_suppliers_full's FULL OUTER in llm_queries.py)
-
-
 # ---------------------------------------------------------------------------
 # Windows (SURVEY A4/O1/O2 generalized)
 # ---------------------------------------------------------------------------
 
 
+@query("top3_orders_per_customer", gate=False)
 def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via row_number window (reference A4 top-terms
-    pattern). Partition by custkey → state bounded per key at any scale.
-    (r10 rotation: gate seat given to docs_dup_cluster_reps — the
-    row_number-top-k shape stays gated via customer_revenue_quartiles
-    and docs_bm25_topk; driver-grade DuckDB parity retained in
-    plans/parity_extras.py.)"""
+    pattern). Partition by custkey → state bounded per key at any scale."""
     od = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     w = W.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
@@ -338,10 +318,7 @@ def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (order_gap_days rotated out of the gate in r8 to make room for
-# emb_kmeans_cells — the LAG offset-window surface keeps driver-grade
-# DuckDB parity in plans/parity_extras.py; date arithmetic stays gated
-# via customer_rolling_30d_revenue / events_asof_join)
+@query("order_gap_days", gate=False)
 def order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG window: days since the customer's previous order."""
     od = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
@@ -354,12 +331,6 @@ def order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lag(F.col("o_orderdate").cast("date")).over(w),
         ).alias("gap_days"),
     ).orderBy("o_custkey", "o_orderkey")
-
-
-# (events_sessionization rotated out of the gate in r6 to make room for
-# docs_chunking — the session surface stays gated via the NATIVE
-# session_window query events_session_window_native; the lag-gap batch
-# formulation keeps DuckDB parity in plans/parity_extras.py)
 
 
 @query("events_asof_join")
@@ -470,16 +441,7 @@ def part_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-# (orders_date_functions rotated out of the gate in r6 — date arithmetic
-# stays gated via order_gap_days / orders_shipments_in_window /
-# customer_rolling_30d_revenue; parity in plans/parity_extras.py)
-
-
-# (conditional_agg_promo_share rotated out of the gate in r6 to make room
-# for emb_pq_recall — CASE-WHEN-in-aggregate stays gated via
-# docs_gopher_filter's nine conditional sums (cube_returnflag_status
-# moved to EXTRAS at the second r15 rotation);
-# parity in plans/parity_extras.py)
+@query("conditional_agg_promo_share", gate=False)
 def conditional_agg_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: CASE WHEN inside an aggregate (conditional agg).
     `part` is SF×200k rows — it scales linearly with the fact, so no static

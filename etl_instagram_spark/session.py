@@ -31,27 +31,15 @@ def get_spark(app_name: str = "etl_instagram_spark", shuffle_partitions: int | N
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # Join strategy (guide §3.1), adjudicated r20: the r19 static
-        # preferSortMergeJoin=false measured NEUTRAL per-site
-        # (interleaved min-of-5 at sf0.1: docs_near_dedup_summary
-        # SMJ 1.47 vs SHJ 1.65, emb_semantic_dedup 1.97 vs 1.96,
-        # events_dcm_quantiles 4.13 vs 3.90 — opposite signs, noise
-        # scale), and the static planner path trusts build-side size
-        # ESTIMATES: a post-filter misestimate makes SHJ OOM where
-        # SMJ's sort would spill. So the default reverts to Spark's
-        # sort-merge preference and SMJ→SHJ rewrites ride the AQE
-        # threshold below, which is gated on MEASURED post-shuffle
-        # sizes. Deployments that have verified bounded build sides can
-        # re-enable via SPARK_GRAFT_PREFER_SHJ=1 (ADVICE r19 #2).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "false"
-            if os.environ.get("SPARK_GRAFT_PREFER_SHJ", "0") == "1"
-            else "true",
-        )
+        # Sort-merge join by default: a static shuffled-hash preference
+        # trusts build-side size ESTIMATES, and a post-filter misestimate
+        # makes SHJ OOM where SMJ's sort would spill. SMJ→SHJ rewrites
+        # ride the AQE threshold below, gated on MEASURED post-shuffle
+        # sizes.
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # long-lived sessions (the 40-min test suite, multi-rep bench

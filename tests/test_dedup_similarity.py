@@ -240,14 +240,11 @@ def test_ann_recall_gates_on_real_embeddings(spark):
     LSH-at-3.5%-scan cannot. Isotropic synthetic vectors are LSH's worst
     case, so only shape is asserted for it; the exact values are pinned
     by the DuckDB oracle."""
-    from etl_instagram_spark.plans.llm_queries import (
-        emb_ann_ivf_recall,
-        emb_ann_recall,
-    )
+    from etl_instagram_spark.plans.q_emb import emb_ann_ivf_recall, emb_ann_recall
 
     sf = "/root/testdata/sf0.001"
-    # both rotated out of the gate (ivf_recall r9, ann_recall r13); the
-    # recall floors stay pinned here and parity in parity_extras
+    # both are non-gate rows: the recall floors stay pinned here and the
+    # DuckDB parity in tests/test_rotated_parity.py
     lsh = emb_ann_recall(spark, sf).collect()
     ivf = emb_ann_ivf_recall(spark, sf).collect()
     assert [(r["qid"], r["probe_hamming"]) for r in lsh] == [
@@ -389,7 +386,7 @@ def test_near_dedup_keep_best_keeps_longest_per_cluster(spark):
 
 def test_cc_converges_well_inside_the_oracle_round_budget(spark, sf_oracle):
     """The docs_dup_cluster_reps oracle replays connected components as
-    a FIXED 16 min-label rounds (llm_queries._CC_ORACLE_ROUNDS); its
+    a FIXED 16 min-label rounds (q_shared._CC_ORACLE_ROUNDS); its
     correctness rests on the gate data's dup graph converging within
     that budget. Pin the margin: the real verified-pair graph at the
     gate scale factor converges in <= 8 rounds (min-label raises if it

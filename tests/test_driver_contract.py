@@ -13,20 +13,24 @@ import __spark_entry__ as entry_mod
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-# every registered query is oracle-gated: the last rows-only entry
-# (emb_ann_ivf_recall) gained a generated centroid-literal oracle, so
-# this set should stay empty — add to it only with a documented reason
-ROWS_ONLY: set[str] = set()
-
-
 def test_queries_and_oracles_pair_up():
     qs, oq = entry_mod.queries(), entry_mod.oracle_sql()
-    assert set(oq) <= set(qs)
-    # every query is oracle-gated except the documented rows-only set
-    assert set(qs) - set(oq) == ROWS_ONLY
+    assert set(qs) == set(oq)
     # the driver's CORRECTNESS file caps at 50 rows — stay at exactly 50
     # so every registered query gets a driver-side row
     assert len(qs) == 50
+
+
+def test_non_gate_rows_pair_with_oracles():
+    """Pure Python, no Spark: every non-gate row has an oracle entry,
+    no name is both gate and non-gate, and no oracle is orphaned."""
+    from etl_instagram_spark.plans import rotated_queries
+    from etl_instagram_spark.plans.oracle import _ORACLE
+
+    gate, rotated = set(entry_mod.queries()), set(rotated_queries())
+    assert not gate & rotated
+    assert rotated <= set(_ORACLE)
+    assert set(_ORACLE) == gate | rotated
 
 
 @pytest.fixture(scope="module")
@@ -52,8 +56,6 @@ def test_column_aliases_match_oracle(gate_runs, sf_smoke):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_smoke}/{t}.parquet'")
     mismatches = []
     for name, (cols, _, _) in gate_runs.items():
-        if name in ROWS_ONLY:
-            continue
         spark_cols = sorted(cols)
         duck_cols = sorted(con.sql(entry_mod.oracle_sql()[name]).columns)
         if spark_cols != duck_cols:
@@ -75,8 +77,6 @@ def test_result_value_types_match_oracle(gate_runs, sf_smoke):
     mismatches = []
     oq = entry_mod.oracle_sql()
     for name, (cols, _, rows) in gate_runs.items():
-        if name in ROWS_ONLY:
-            continue
         s_types = {c: set() for c in cols}
         for row in rows:
             for c, v in zip(cols, row):

@@ -1,7 +1,7 @@
 """DSIR importance resampling (operators/dsir): weight math pinned by a
 pure-Python differential, selection pinned for partitioning-independence
-and target-domain enrichment. Cross-engine value parity lives in
-parity_extras (docs_dsir_selection)."""
+and target-domain enrichment. Cross-engine value parity lives in the
+non-gate row docs_dsir_selection (plans/extras_docs.py)."""
 
 from __future__ import annotations
 

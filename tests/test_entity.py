@@ -327,7 +327,7 @@ def test_cc_oracle_convergence_assert_fires():
     sufficient budget returns minimal labels."""
     import duckdb
 
-    from etl_instagram_spark.plans.llm_queries import _sql_cc_rounds
+    from etl_instagram_spark.plans.q_shared import _sql_cc_rounds
 
     chain = ",".join(f"({i},{i+1})" for i in range(1, 9))  # path 1..9
     base = f"verified AS (SELECT ia, ib FROM (VALUES {chain}) t(ia, ib))"

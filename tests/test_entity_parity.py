@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from etl_instagram_spark.operators.entity import incremental_resolve_entities
 from etl_instagram_spark.operators.merge import MergeTable
-from etl_instagram_spark.plans.llm_queries import _sql_cc_rounds
+from etl_instagram_spark.plans.q_shared import _sql_cc_rounds
 
 PART = "/root/testdata/sf0.001/part.parquet"
 N_EPOCHS = 3

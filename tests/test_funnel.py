@@ -1,7 +1,8 @@
 """operators/funnel.py — earliest-anchor funnels + cohort retention.
 
-Cross-engine value parity lives in the EXTRAS rows
-events_funnel_levels / events_cohort_retention; here: hand cases
+Cross-engine value parity lives in the rows events_funnel_levels
+(plans/q_events.py) and events_cohort_retention (plans/extras_events.py);
+here: hand cases
 pinning the documented semantics (earliest anchor, strictly-after,
 window cutoff), a Python differential on real events, validation, and
 partitioning invariance."""

@@ -2,7 +2,7 @@
 
 Certification layers, mirroring test_sketches.py's HLL suite: DuckDB
 replay of the k-set / summary / pairwise-overlap faces (bit-for-bit;
-also the EXTRAS row docs_kmv_shingle_overlap), merge algebra (halves ==
+also the gate row docs_kmv_shingle_overlap in plans/q_docs.py), merge algebra (halves ==
 whole, idempotent re-merge), accuracy envelopes (distinct estimate
 within 3σ ≈ 3/√(k−2); planted-overlap Jaccard within a Binomial
 envelope), the exact-below-k branch (k-set == value set ⇒ every column

@@ -14,22 +14,14 @@ import re
 
 import pytest
 
-from etl_instagram_spark.plans.queries import all_queries
+from etl_instagram_spark.plans import all_queries, rotated_queries
 
 SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name: str) -> str:
-    reg = all_queries()
-    if name in reg:
-        fn = reg[name]
-    else:
-        # queries rotated out of the 50-row gate keep their plan pins:
-        # rotation moves the value check to parity_extras, not the
-        # physical-plan expectations
-        from etl_instagram_spark.plans.parity_extras import EXTRAS
-
-        fn = EXTRAS[name][0]
+    # non-gate rows keep their plan pins too
+    fn = all_queries().get(name) or rotated_queries()[name][0]
     return fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
 
 
@@ -68,7 +60,8 @@ def test_recall_pair_stage_broadcasts(spark):
     stage test_no_unbroadcast_cartesian_products cannot see."""
     from pyspark.sql import functions as F
 
-    from etl_instagram_spark.plans.llm_queries import _as_double, _recall_pairs
+    from etl_instagram_spark.plans.q_emb import _recall_pairs
+    from etl_instagram_spark.plans.q_shared import _as_double
     from etl_instagram_spark.plans.queries import _t
 
     emb = _t(spark, SF, "embeddings")

@@ -1,18 +1,18 @@
-"""DuckDB parity for gate-rotated queries (plans/parity_extras.py).
+"""DuckDB parity for the non-gate rows (``@query(name, gate=False)``).
 
-The driver's CORRECTNESS gate holds 50 rows, so promoting new operator
-families rotates older queries out. This suite applies the SAME check the
-driver would — column names, values, and Python value types — to every
-rotated query, so gate rotation never silently drops operator-surface
-regression coverage (the round-5 rotation did exactly that for ROLLUP
-and running-frame windows; ADVICE r5)."""
+The driver's CORRECTNESS gate holds 50 rows; every other registered
+query gets the SAME check here — column names, values, and Python value
+types — so moving a query out of the gate never drops its regression
+coverage."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from etl_instagram_spark.plans.parity_extras import EXTRAS
+from etl_instagram_spark.plans import rotated_queries
+
+ROWS = rotated_queries()
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -25,9 +25,9 @@ def duck(sf_oracle):
     return con
 
 
-@pytest.mark.parametrize("name", sorted(EXTRAS))
+@pytest.mark.parametrize("name", sorted(ROWS))
 def test_rotated_query_matches_oracle(spark, sf_oracle, duck, name):
-    fn, sql = EXTRAS[name]
+    fn, sql = ROWS[name]
     if callable(sql):  # lazy mirrors whose literals are fit from data
         sql = sql()
     sdf = fn(spark, sf_oracle)

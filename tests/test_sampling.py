@@ -1,7 +1,7 @@
 """operators/sampling.py pps_sample — systematic PPS weighted sampling.
 
-Cross-engine value parity also runs via the EXTRAS row docs_pps_sample
-(tests/test_rotated_parity.py); here: the exact-total / floor-ceil-share
+Cross-engine value parity also runs via the non-gate row docs_pps_sample
+(plans/extras_docs.py, tests/test_rotated_parity.py); here: the exact-total / floor-ceil-share
 grid properties, multiplicity on dominating weights, partitioning
 invariance, DuckDB equality on a hand corpus, and validation."""
 

@@ -1,8 +1,8 @@
 """operators/sketches.py — cross-engine-exact HyperLogLog.
 
 Certification layers: DuckDB replay of registers + exact harmonic sum +
-estimate (also the gate row events_hll_distinct — EXTRAS r10–r13,
-promoted r14), merge algebra
+estimate (also the gate row events_hll_distinct in plans/q_events.py),
+merge algebra
 (split == whole, bit-exact), accuracy envelopes (raw in its valid
 range, corrected at small n), NULL semantics, partitioning invariance,
 and the continuous register store (stream == batch, replay no-op)."""

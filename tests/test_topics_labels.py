@@ -3,6 +3,7 @@ fixture, FIXTURES.md §3), corpus LDA, and the labels enrichment stub."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_instagram_spark.enrich import labels as L
@@ -215,3 +216,20 @@ def test_corpus_topics_stemmed_vocabulary(spark):
     topics_raw, _ = TP.corpus_topics(df, "text", k=2, seed=3, optimizer="em", stem=False)
     raw_names = {t["name"] for r in topics_raw.collect() for t in r["terms"]}
     assert "running" in raw_names
+
+
+@pytest.mark.parametrize("langs", [("es",), ["es"]], ids=["tuple", "list"])
+def test_attach_topics_default_assembly_accepts_langs_sequence(spark, langs):
+    # the default text_col path caches its Column set keyed on langs: a
+    # list must key like the equal tuple instead of raising TypeError.
+    # Schema only — no Spark job runs.
+    df = spark.createDataFrame(
+        [],
+        "id string, caption string, accessibility string, "
+        "user struct<full_name:string>, location struct<name:string>",
+    )
+    out = TP.attach_topics(df, langs=langs)
+    assert out.columns == df.columns + ["topics"]
+    assert out.schema["topics"].dataType.simpleString() == (
+        "array<struct<confidence:double,name:string>>"
+    )

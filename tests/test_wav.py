@@ -419,7 +419,7 @@ def _ima_encode(samples_per_chan, spb):
     return blocks, recon
 
 
-def _ima_extra(spb):
+def _ima_ext(spb):
     return struct.pack("<HH", 2, spb)  # cbSize=2, wSamplesPerBlock
 
 
@@ -428,7 +428,7 @@ def test_ima_adpcm_mono_matches_spec_encoder():
     n = spb * 3
     src = [_sine(n, 300, amp=9000)]
     body, recon = _ima_encode(src, spb)
-    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb), fact=n)
+    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb), fact=n)
     d = decode_wav(w)
     assert (d["fmt"], d["n_frames"], d["samples_per_block"]) == (
         "ima_adpcm",
@@ -449,7 +449,7 @@ def test_ima_adpcm_stereo_partial_tail_block():
     ]
     body, recon = _ima_encode(src, spb)
     w = _wav_bytes(
-        0x11, ch, 8000, 4, block, body, extra=_ima_extra(spb), fact=n
+        0x11, ch, 8000, 4, block, body, extra=_ima_ext(spb), fact=n
     )
     d = decode_wav(w)
     assert d["n_frames"] == n
@@ -493,12 +493,12 @@ def test_ima_adpcm_validation_gates():
     # samples_per_block inconsistent with block_align
     with pytest.raises(ValueError, match="samples_per_block"):
         decode_wav(
-            _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_extra(99))
+            _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_ext(99))
         )
     # block_align not header + whole nibble words
     with pytest.raises(ValueError, match="block_align"):
         decode_wav(
-            _wav_bytes(0x11, 1, 8000, 4, 255, body, extra=_ima_extra(spb))
+            _wav_bytes(0x11, 1, 8000, 4, 255, body, extra=_ima_ext(spb))
         )
     # step index out of range in a block header
     bad = bytearray(body)
@@ -506,13 +506,13 @@ def test_ima_adpcm_validation_gates():
     with pytest.raises(ValueError, match="step index"):
         decode_wav(
             _wav_bytes(
-                0x11, 1, 8000, 4, block, bytes(bad), extra=_ima_extra(spb)
+                0x11, 1, 8000, 4, block, bytes(bad), extra=_ima_ext(spb)
             )
         )
     # widths other than 4 stay loud
     with pytest.raises(NotImplementedError, match="IMA ADPCM"):
         decode_wav(
-            _wav_bytes(0x11, 1, 8000, 8, block, body, extra=_ima_extra(spb))
+            _wav_bytes(0x11, 1, 8000, 8, block, body, extra=_ima_ext(spb))
         )
 
 
@@ -526,14 +526,14 @@ def test_ima_adpcm_even_spb_header_form():
     n = spb * 2
     src = [_sine(n, 300, amp=9000)]
     body, recon = _ima_encode(src, spb)
-    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb), fact=n)
+    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb), fact=n)
     d = decode_wav(w)
     assert (d["n_frames"], d["samples_per_block"]) == (n, spb)
     assert d["samples"] == recon[0]
     # spb outside {expect, expect-1} still refuses loudly
     with pytest.raises(ValueError, match="samples_per_block"):
         decode_wav(
-            _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_extra(503))
+            _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_ext(503))
         )
 
 
@@ -545,7 +545,7 @@ def test_ima_adpcm_fact_chunk_truncates():
     src = [_sine(n, 300, amp=9000)]
     body, recon = _ima_encode(src, spb)
     w = _wav_bytes(
-        0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb), fact=700
+        0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb), fact=700
     )
     d = decode_wav(w)
     assert d["n_frames"] == 700
@@ -612,7 +612,7 @@ def _ms_encode(samples_per_chan, spb, pred_for_block=lambda bi: 0):
     return body, recon
 
 
-def _ms_extra(spb, coefs=None):
+def _ms_ext(spb, coefs=None):
     from etl_instagram_spark.multimodal.wav import _MS_STD_COEFS
 
     coefs = coefs if coefs is not None else _MS_STD_COEFS
@@ -628,7 +628,7 @@ def test_ms_adpcm_mono_matches_spec_encoder():
     src = [_sine(n, 300, amp=9000)]
     # vary the predictor per block so coef2 != 0 pairs are exercised
     body, recon = _ms_encode(src, spb, pred_for_block=lambda bi: (0, 1, 3)[bi])
-    w = _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_extra(spb), fact=n)
+    w = _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_ext(spb), fact=n)
     d = decode_wav(w)
     assert (d["fmt"], d["n_frames"], d["samples_per_block"]) == (
         "ms_adpcm",
@@ -648,7 +648,7 @@ def test_ms_adpcm_stereo_partial_tail_block():
         _sine(n, 390, amp=6000),
     ]
     body, recon = _ms_encode(src, spb, pred_for_block=lambda bi: (4, 6)[bi])
-    w = _wav_bytes(2, ch, 8000, 4, block, body, extra=_ms_extra(spb), fact=n)
+    w = _wav_bytes(2, ch, 8000, 4, block, body, extra=_ms_ext(spb), fact=n)
     d = decode_wav(w)
     assert d["n_frames"] == n
     want = [recon[c][i] for i in range(n) for c in range(ch)]
@@ -671,16 +671,16 @@ def test_ms_adpcm_validation_gates():
         decode_wav(_wav_bytes(2, 1, 8000, 4, block, body))
     # samples_per_block inconsistent with block_align
     with pytest.raises(ValueError, match="samples_per_block"):
-        decode_wav(_wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_extra(99)))
+        decode_wav(_wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_ext(99)))
     # block_align smaller than the 7-byte/channel header
     with pytest.raises(ValueError, match="block_align"):
-        decode_wav(_wav_bytes(2, 1, 8000, 4, 7, body, extra=_ms_extra(spb)))
+        decode_wav(_wav_bytes(2, 1, 8000, 4, 7, body, extra=_ms_ext(spb)))
     # coefficient table not led by the standard pairs
     bad_coefs = ((1, 1),)
     with pytest.raises(ValueError, match="standard pairs"):
         decode_wav(
             _wav_bytes(
-                2, 1, 8000, 4, block, body, extra=_ms_extra(spb, bad_coefs)
+                2, 1, 8000, 4, block, body, extra=_ms_ext(spb, bad_coefs)
             )
         )
     # predictor index past the coefficient table
@@ -688,11 +688,11 @@ def test_ms_adpcm_validation_gates():
     bad[0] = 7
     with pytest.raises(ValueError, match="predictor index"):
         decode_wav(
-            _wav_bytes(2, 1, 8000, 4, block, bytes(bad), extra=_ms_extra(spb))
+            _wav_bytes(2, 1, 8000, 4, block, bytes(bad), extra=_ms_ext(spb))
         )
     # widths other than 4 stay loud
     with pytest.raises(NotImplementedError, match="MS ADPCM"):
-        decode_wav(_wav_bytes(2, 1, 8000, 8, block, body, extra=_ms_extra(spb)))
+        decode_wav(_wav_bytes(2, 1, 8000, 8, block, body, extra=_ms_ext(spb)))
 
 
 def test_ms_adpcm_header_idelta_clamped_on_read():
@@ -709,10 +709,10 @@ def test_ms_adpcm_header_idelta_clamped_on_read():
     floored = bytearray(body)
     floored[1:3] = (16).to_bytes(2, "little", signed=True)
     d_evil = decode_wav(
-        _wav_bytes(2, 1, 8000, 4, block, bytes(evil), extra=_ms_extra(spb))
+        _wav_bytes(2, 1, 8000, 4, block, bytes(evil), extra=_ms_ext(spb))
     )
     d_floor = decode_wav(
-        _wav_bytes(2, 1, 8000, 4, block, bytes(floored), extra=_ms_extra(spb))
+        _wav_bytes(2, 1, 8000, 4, block, bytes(floored), extra=_ms_ext(spb))
     )
     assert d_evil["samples"] == d_floor["samples"]
 
@@ -723,7 +723,7 @@ def test_ms_adpcm_fact_chunk_truncates():
     src = [_sine(n, 300, amp=9000)]
     body, recon = _ms_encode(src, spb)
     d = decode_wav(
-        _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_extra(spb), fact=700)
+        _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_ext(spb), fact=700)
     )
     assert d["n_frames"] == 700
     assert d["samples"] == recon[0][:700]
@@ -743,7 +743,7 @@ def test_chunk_audio_ms_adpcm_block_concat_roundtrip(spark):
     n = spb * 20 + 91
     src = [_sine(n, 260, amp=9000)]
     body, _ = _ms_encode(src, spb)
-    w = _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_extra(spb), fact=n)
+    w = _wav_bytes(2, 1, 8000, 4, block, body, extra=_ms_ext(spb), fact=n)
     df = spark.createDataFrame([("m", bytearray(w))], "id string, content binary")
     rows = (
         chunk_audio(df, chunk_ms=200, max_chunks=32, decoder="wav")
@@ -768,7 +768,7 @@ def test_chunk_audio_adpcm_block_concat_roundtrip(spark):
     n = spb * 20 + 77  # ~10k samples at 8 kHz -> ~1.3 s
     src = [_sine(n, 260, amp=9000)]
     body, _ = _ima_encode(src, spb)
-    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb), fact=n)
+    w = _wav_bytes(0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb), fact=n)
     df = spark.createDataFrame([("a", bytearray(w))], "id string, content binary")
     rows = (
         chunk_audio(df, chunk_ms=200, max_chunks=32, decoder="wav")
@@ -799,7 +799,7 @@ def test_chunk_audio_adpcm_fact_truncated_concat_roundtrip(spark):
     # fact caps to ~60% of the raw stream: duration_ms shrinks, and the
     # final ~8 blocks' first-sample ms land past the duration grid
     w = _wav_bytes(
-        0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb),
+        0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb),
         fact=spb * 12 + 3,
     )
     df = spark.createDataFrame([("f", bytearray(w))], "id string, content binary")
@@ -856,7 +856,7 @@ def test_wav_features_g711_and_adpcm_near_dup(spark):
     spb, block = 505, 256
     body, _ = _ima_encode([src], spb)
     w_adpcm = _wav_bytes(
-        0x11, 1, 8000, 4, block, body, extra=_ima_extra(spb), fact=len(src)
+        0x11, 1, 8000, 4, block, body, extra=_ima_ext(spb), fact=len(src)
     )
     df = spark.createDataFrame(
         [("pcm", bytearray(w_pcm)), ("ulaw", bytearray(w_ulaw)),
@@ -898,7 +898,7 @@ def test_decode_wav_np_matches_list_decode_every_format():
     ]
     body, _ = _ima_encode([src[:505]], 505)
     cases.append(
-        _wav_bytes(0x11, 1, 8000, 4, 256, body, extra=_ima_extra(505), fact=505)
+        _wav_bytes(0x11, 1, 8000, 4, 256, body, extra=_ima_ext(505), fact=505)
     )
     for w in cases:
         a = decode_wav(w)

@@ -245,7 +245,8 @@ def run_one_op(op: str, docs_path: str, emb_path: str, mult: int) -> dict:
             )
 
         def _run_qann():
-            # pinned like the EXTRAS row (r18): projection collapse
+            # pinned like the emb_quantized_ann_rerank row
+            # (plans/extras_emb.py): projection collapse
             # would inline the quantize -> dequantize chain into every
             # unrolled ivf_cell term and both cosine legs otherwise —
             # and a real vector store PERSISTS its codes + cells
