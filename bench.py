@@ -78,7 +78,6 @@ def etl_tick_seconds(spark, n_pages: int = 10_000, posts_per_page: int = 3) -> f
     which otherwise has correctness coverage but no perf series. Page
     HTML is generated deterministically inside the fetch worker, so the
     run is self-contained and sf-independent."""
-    import json as _json
     import shutil
     import tempfile
 
@@ -341,8 +340,8 @@ def stream_dedup_tick_seconds(
 def stream_hh_tick_seconds(
     spark, n_seed: int = 200_000, n_batch: int = 200_000, capacity: int = 200
 ) -> float:
-    """Steady-state continuous-heavy-hitters throughput: ONE
-    stream_heavy_hitters tick draining ``n_batch`` landed term rows into
+    """Steady-state continuous-heavy-hitters throughput: ONE drain
+    tick folding ``n_batch`` landed term rows (apply_hh_delta) into
     an epoch-keyed summary store already holding a ``n_seed``-row epoch
     (seeded by an untimed first drain of the SAME landing dir /
     checkpoint lineage — the store+checkpoint unit the operator
@@ -356,8 +355,9 @@ def stream_hh_tick_seconds(
 
     from etl_instagram_spark.operators.merge import MergeTable
     from etl_instagram_spark.streaming.incremental import (
+        apply_hh_delta,
+        drain,
         heavy_hitters_read,
-        stream_heavy_hitters,
     )
 
     def synth_terms(start: int, n: int):
@@ -380,14 +380,18 @@ def stream_hh_tick_seconds(
             order_by="epoch_id",
         )
         ddl = "term STRING"
+
+        def tick(batch_df, epoch_id):
+            apply_hh_delta(store, batch_df, epoch_id)
+
         synth_terms(0, n_seed).repartition(4).write.json(landing)
         # seed tick (untimed): epoch 0 into the summary store
-        stream_heavy_hitters(spark, landing, ddl, store, ckpt)
+        drain(spark, landing, ddl, ckpt, tick)
         synth_terms(n_seed, n_batch).repartition(4).write.mode("append").json(
             landing
         )
         t0 = time.perf_counter()
-        stream_heavy_hitters(spark, landing, ddl, store, ckpt)
+        drain(spark, landing, ddl, ckpt, tick)
         n_hh = heavy_hitters_read(store, capacity, 1, 100).count()
         elapsed = time.perf_counter() - t0
         # the 10 hot terms must be reported; near-threshold extras allowed

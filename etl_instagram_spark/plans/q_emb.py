@@ -604,7 +604,6 @@ def emb_ann_ivf_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from etl_instagram_spark.operators.similarity import (
-        _nearest_centroids,
         ann_ivf_topk,
         fit_ivf_centroids,
         ivf_cell,

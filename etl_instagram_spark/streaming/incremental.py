@@ -101,17 +101,32 @@ class CircuitBreaker:
             os.remove(self._alerts_path)
 
 
-def _drain(
+def drain(
     spark: SparkSession,
     landing_dir: str,
     schema_ddl: str,
     checkpoint_dir: str,
     handle: Callable[[DataFrame, int], None],
 ) -> None:
-    """The shared one-tick scaffold: JSON file stream → foreachBatch →
-    AvailableNow → block until drained. Every incremental entry point
-    goes through here so stream-source tuning (e.g. maxFilesPerTrigger)
-    lands in one place."""
+    """One AvailableNow tick: JSON file stream → foreachBatch(``handle``)
+    → block until everything landed is drained. Every incremental entry
+    point goes through here so stream-source tuning (e.g.
+    maxFilesPerTrigger) lands in one place. An epoch-keyed store is
+    maintained by passing its delta as the handle, e.g.
+    ``drain(spark, landing, ddl, ckpt,
+    lambda b, e: apply_hh_delta(store, b, e, "term"))``.
+
+    Two contracts hold for every handle:
+
+    - the store(s) a handle writes and ``checkpoint_dir`` are a UNIT:
+      epoch ids restart at 0 under a fresh checkpoint, so an epoch-keyed
+      store relocated or wiped without its checkpoint (or vice versa)
+      breaks exactly-once — move them together;
+    - the handle sees one micro-batch at a time, so a delta with a
+      per-batch completeness contract (:func:`apply_cooc_delta`'s
+      complete walks) needs each walk's rows in one landed file, kept
+      whole within a micro-batch by any maxFilesPerTrigger-style
+      knob."""
     q = (
         spark.readStream.schema(schema_ddl)
         .json(landing_dir)
@@ -148,7 +163,7 @@ def stream_upsert(
         if on_batch is not None:
             on_batch(batch_df, epoch_id)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -215,7 +230,7 @@ def stream_upsert_with_changelog(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         apply_changelog_batch(table, changes, batch_df, epoch_id)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -265,7 +280,7 @@ def stream_pages_with_sentinel_gate(
             if on_alert is not None:
                 breaker.alert_once(incident, on_alert)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -381,7 +396,7 @@ def stream_near_dedup(
         # re-evaluation pin would be a redundant full materialization
         clean_table.upsert(survivors, assume_pinned=True)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -413,7 +428,7 @@ def stream_semantic_dedup(
         )
         clean_table.upsert(survivors)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -507,7 +522,7 @@ def stream_profile_drift(
             ):
                 breaker.alert_once(f"shape_drift:{shape_col}", on_alert)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -539,7 +554,7 @@ def stream_ann_index(
             ann_index_rows(batch_df, centroids, codebooks, vec_col, id_col)
         )
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True
 
 
@@ -573,7 +588,12 @@ def apply_rollup_delta(
 
     The maintenance ``grain`` is stamped on every row;
     ``continuous_rollup_read`` validates its requested finest grain
-    against it (a finer read would silently mislabel coarse buckets)."""
+    against it (a finer read would silently mislabel coarse buckets) —
+    keep the maintenance grain/dims constant per table. Drained per
+    tick (:func:`drain`), the expensive raw-event scan happens ONCE per
+    event, at ingest; every later multi-grain read touches only the
+    partials — operators/temporal.hypertable_rollup's scan stage
+    amortized across the table's whole life."""
     delta = (
         batch_df.groupBy(
             F.date_trunc(grain, F.col(ts_col)).alias("bucket"), *dims
@@ -588,37 +608,38 @@ def apply_rollup_delta(
     partials.upsert(delta)
 
 
-def stream_continuous_rollup(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    partials: MergeTable,
-    checkpoint_dir: str,
-    ts_col: str = "ts",
-    grain: str = "hour",
-    dims: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-) -> bool:
-    """One AvailableNow tick maintaining a continuous aggregate: drain
-    new event files and fold each micro-batch's finest-grain partial
-    sums into ``partials`` (a MergeTable keyed on (epoch_id, bucket,
-    *dims)). The expensive raw-event scan happens ONCE per event, at
-    ingest; every later multi-grain read touches only the partials —
-    operators/temporal.hypertable_rollup's scan stage amortized across
-    the table's whole life, which is what makes hour/day/week dashboards
-    over an append-heavy 100 TB events table affordable.
-
-    The partials table and ``checkpoint_dir`` are a UNIT (epoch ids
-    restart under a new checkpoint — see apply_rollup_delta); keep the
-    maintenance grain/dims constant per table."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_rollup_delta(
-            partials, batch_df, epoch_id, ts_col, grain, dims, value_col
+def _guard_watermark(stored: DataFrame, through_epoch: int) -> None:
+    """Refuse a compaction watermark at or above the newest epoch in
+    ``stored`` (see :func:`compact_rollup_partials` for why)."""
+    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
+    if mx is None or through_epoch >= mx:
+        raise ValueError(
+            f"through_epoch must be < the newest epoch present ({mx}); "
+            f"got {through_epoch} — the latest epoch may still re-fire"
         )
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
+
+def _compact_epochs(
+    store: MergeTable,
+    through_epoch: int,
+    merge: Callable[[DataFrame], DataFrame],
+) -> int:
+    """The watermark compaction every epoch-keyed store shares: guard
+    the watermark, fold the rows at or below it through the store's
+    ``merge`` algebra, re-key the result at ``through_epoch`` and
+    rewrite kept ∪ merged in ONE overwrite. Returns rows eliminated
+    (0, with no rewrite, when nothing sits at or below the watermark)."""
+    stored = store.read()
+    _guard_watermark(stored, through_epoch)
+    old = stored.filter(F.col("epoch_id") <= through_epoch)
+    n_old = old.count()
+    if n_old == 0:
+        return 0
+    merged = merge(old).withColumn("epoch_id", F.lit(int(through_epoch)))
+    keep = stored.filter(F.col("epoch_id") > through_epoch)
+    n_merged = merged.count()
+    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
+    return n_old - n_merged
 
 
 def compact_rollup_partials(
@@ -650,30 +671,15 @@ def compact_rollup_partials(
 
     Returns the number of rows eliminated."""
     sum_col = f"__sum_{value_col}"
-    stored = partials.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = (
-        old.groupBy("bucket", *dims)
-        .agg(
+    return _compact_epochs(
+        partials,
+        through_epoch,
+        lambda old: old.groupBy("bucket", *dims).agg(
             F.sum("__rc").alias("__rc"),
             F.sum(sum_col).alias(sum_col),
             F.min("grain").alias("grain"),
-        )
-        .withColumn("epoch_id", F.lit(int(through_epoch)))
+        ),
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    partials.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 def continuous_rollup_read(
@@ -813,29 +819,6 @@ def _store_to_summary(rows: DataFrame) -> DataFrame:
     )
 
 
-def stream_heavy_hitters(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    term_col: str = "term",
-    weight_col: str | None = None,
-) -> bool:
-    """One AvailableNow tick of the continuous frequent-terms loop:
-    drain newly landed term rows (e.g. the exploded token stream of an
-    ingest tick) and fold each micro-batch's exact counts into the
-    epoch-keyed summary store. Crash replays upsert identical rows; the
-    store + checkpoint_dir are a unit, like the rollup partials.
-    ``weight_col`` maintains the WEIGHTED summary (see apply_hh_delta)."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_hh_delta(store, batch_df, epoch_id, term_col, weight_col)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
-
-
 def heavy_hitters_read(
     store: MergeTable,
     capacity: int,
@@ -906,30 +889,15 @@ def compact_hh_summaries(
     how mergeable summaries compose). Returns rows eliminated."""
     from etl_instagram_spark.operators.frequency import mg_merge
 
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = (
-        mg_merge(_store_to_summary(old), capacity)
-        .select(
+    return _compact_epochs(
+        store,
+        through_epoch,
+        lambda old: mg_merge(_store_to_summary(old), capacity).select(
             F.coalesce(F.col("term"), F.lit(HH_TOTAL_KEY)).alias("term_key"),
             "weight",
             "n_part",
-        )
-        .withColumn("epoch_id", F.lit(int(through_epoch)))
+        ),
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 # ---------------------------------------------------------------------------
@@ -1047,29 +1015,6 @@ def apply_dsir_delta(
         .withColumn("epoch_id", F.lit(int(epoch_id)))
     )
     store.upsert(delta)
-
-
-def stream_dsir_counts(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    n_buckets: int,
-    text_col: str = "text",
-) -> bool:
-    """One AvailableNow tick maintaining the DSIR raw-corpus feature
-    counts: drain newly landed documents and fold each micro-batch's
-    bucket counts into ``store``. Store and checkpoint are a unit (the
-    stream_kmeans_stats contract). At 100 TB this is the point of the
-    surface: the raw-side model follows the corpus continuously without
-    ever rescanning history — only the O(n_buckets) counts persist."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_dsir_delta(store, batch_df, epoch_id, n_buckets, text_col)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
 
 
 def dsir_read_model(
@@ -1219,24 +1164,7 @@ def compact_dcm_store(
     from etl_instagram_spark.operators.sketches import dcm_merge
 
     g = list(group_cols or [])
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = dcm_merge(old, g).withColumn(
-        "epoch_id", F.lit(int(through_epoch))
-    )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
+    return _compact_epochs(store, through_epoch, lambda old: dcm_merge(old, g))
 
 
 def dcm_read_registers(
@@ -1247,31 +1175,6 @@ def dcm_read_registers(
     from etl_instagram_spark.operators.sketches import dcm_merge
 
     return dcm_merge(store.read(), group_cols)
-
-
-def stream_hll_registers(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    b: int = 12,
-) -> bool:
-    """One AvailableNow tick maintaining continuous distinct-count
-    sketches: drain newly landed rows and fold each micro-batch's HLL
-    registers into ``store``. Store and checkpoint are a unit (the
-    stream_kmeans_stats contract). At 100 TB this is the point: the
-    distinct-cardinality profile follows the corpus continuously with
-    O(groups · 2^b) state and no rescan of history — and the register
-    store stays second-system-checkable (tests replay it in DuckDB)."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_hll_delta(store, batch_df, epoch_id, value_col, group_cols, b)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
 
 
 def hll_read_summary(
@@ -1312,24 +1215,9 @@ def compact_hll_store(
     from etl_instagram_spark.operators.sketches import hll_merge
 
     g = list(group_cols or [])
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = hll_merge(old.select(*g, "bucket", "r"), g).withColumn(
-        "epoch_id", F.lit(int(through_epoch))
+    return _compact_epochs(
+        store, through_epoch, lambda old: hll_merge(old.select(*g, "bucket", "r"), g)
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 def apply_kmv_delta(
@@ -1356,31 +1244,6 @@ def apply_kmv_delta(
     store.upsert(delta)
 
 
-def stream_kmv_sketch(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    k: int = 256,
-) -> bool:
-    """One AvailableNow tick maintaining continuous KMV set synopses:
-    drain newly landed rows and fold each micro-batch's k-set into
-    ``store`` (the stream_hll_registers contract). At 100 TB this is
-    what keeps segment-overlap questions (train-shard vs eval-set
-    contamination, source-vs-source vocabulary overlap) answerable
-    continuously from O(groups · k) state instead of a history rescan
-    — and the k-set store stays second-system-checkable."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_kmv_delta(store, batch_df, epoch_id, value_col, group_cols, k)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
-
-
 def compact_kmv_store(
     store: MergeTable,
     through_epoch: int,
@@ -1398,24 +1261,9 @@ def compact_kmv_store(
     from etl_instagram_spark.operators.kmv import kmv_merge
 
     g = list(group_cols or [])
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = kmv_merge(old.select(*g, "h"), g, k).withColumn(
-        "epoch_id", F.lit(int(through_epoch))
+    return _compact_epochs(
+        store, through_epoch, lambda old: kmv_merge(old.select(*g, "h"), g, k)
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 def kmv_read_sketch(
@@ -1471,33 +1319,6 @@ def apply_wkmv_delta(
     store.upsert(delta)
 
 
-def stream_kmv_weighted_sample(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    id_col: str,
-    weight_col: str,
-    group_cols: list[str] | None = None,
-    k: int = 256,
-) -> bool:
-    """One AvailableNow tick maintaining the continuous weighted
-    sample: drain newly landed (id, weight) rows and fold each
-    micro-batch's bottom-(k+1) state into ``store``. At 100 TB this
-    keeps a fixed-size weighted holdout (and its subset-sum estimator)
-    following the stream from O(groups · k) state — the weighted
-    complement of the kmv_sample/kmv_read_sketch composition."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_wkmv_delta(
-            store, batch_df, epoch_id, id_col, weight_col, group_cols, k
-        )
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
-
-
 def kmv_weighted_read_sample(
     store: MergeTable,
     id_col: str,
@@ -1542,24 +1363,13 @@ def compact_wkmv_store(
     from etl_instagram_spark.operators.kmv import kmv_weighted_state_merge
 
     g = list(group_cols or [])
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = kmv_weighted_state_merge(
-        old.select(*g, id_col, weight_col, "h"), id_col, weight_col, g, k
-    ).withColumn("epoch_id", F.lit(int(through_epoch)))
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
+    return _compact_epochs(
+        store,
+        through_epoch,
+        lambda old: kmv_weighted_state_merge(
+            old.select(*g, id_col, weight_col, "h"), id_col, weight_col, g, k
+        ),
+    )
 
 
 def apply_bm25_delta(
@@ -1602,34 +1412,6 @@ def apply_bm25_delta(
             "epoch_id", F.lit(int(epoch_id))
         )
     )
-
-
-def stream_bm25_index(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    postings_store: MergeTable,
-    corpus_store: MergeTable,
-    checkpoint_dir: str,
-    id_col: str,
-    text_col: str,
-) -> bool:
-    """One AvailableNow tick maintaining the continuous BM25 inverted
-    index: drain newly landed documents and fold each micro-batch's
-    postings + corpus counts into the epoch-keyed store pair. At 100 TB
-    this is what keeps many-queries retrieval answerable over a growing
-    corpus at O(new docs) per tick instead of an O(corpus) index
-    rebuild — the index read (:func:`bm25_read_index` →
-    retrieval.bm25_topk_indexed) stays row-identical to the scan path
-    over everything landed (pinned by test)."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_bm25_delta(
-            postings_store, corpus_store, batch_df, epoch_id, id_col, text_col
-        )
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
 
 
 def bm25_read_index(
@@ -1683,16 +1465,12 @@ def compact_bm25_store(
     over the compacted region): a duplicate (term, ``id_col``) across
     epochs means the landing stream re-landed a document, and silently
     merging it would corrupt tf, so compaction refuses loudly instead.
-    The strictly-below-the-newest-epoch guard matches every other
-    store compactor (the latest epoch may still re-fire). Returns rows
-    eliminated (corpus rows; postings row count is invariant)."""
+    The strictly-below-the-newest-epoch guard is every other store
+    compactor's, applied to ``corpus_store`` (an empty epoch writes a
+    corpus row but no postings). Returns rows eliminated (corpus rows;
+    postings row count is invariant)."""
     stored_c = corpus_store.read()
-    mx = stored_c.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
+    _guard_watermark(stored_c, through_epoch)
     old_c = stored_c.filter(F.col("epoch_id") <= through_epoch)
     n_old = old_c.count()
     if n_old == 0:
@@ -1765,29 +1543,6 @@ def apply_cooc_delta(
     store.upsert(delta)
 
 
-def stream_walk_cooccurrence(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    window: int = 2,
-) -> bool:
-    """One AvailableNow tick maintaining continuous walk co-occurrence
-    counts: drain newly landed walk rows and fold each micro-batch's
-    window pairs into ``store`` (the stream_kmv_sketch scaffold shape;
-    the complete-walks-per-batch contract of
-    :func:`apply_cooc_delta` applies per micro-batch, so size
-    maxFilesPerTrigger-style knobs to keep each walk's file in one
-    batch)."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_cooc_delta(store, batch_df, epoch_id, window)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
-
-
 def cooc_read(store: MergeTable) -> DataFrame:
     """Collapse the epoch-keyed co-occurrence store to ONE (src, ctx,
     cnt) frame — sum over epochs per pair. Pure counting algebra: the
@@ -1808,29 +1563,13 @@ def compact_cooc_store(store: MergeTable, through_epoch: int) -> int:
     through_epoch`` into one count set re-keyed at ``through_epoch`` —
     the :func:`compact_dcm_store` contract verbatim: sum-merge makes
     every read invariant under it, ``through_epoch`` must sit strictly
-    below the newest epoch present (the latest epoch may still
-    re-fire), one atomic overwrite, re-runnable at a higher watermark.
-    Returns rows eliminated."""
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = (
-        old.groupBy("src", "ctx")
-        .agg(F.sum("cnt").alias("cnt"))
-        .withColumn("epoch_id", F.lit(int(through_epoch)))
+    below the newest epoch present (enforced), one atomic overwrite,
+    re-runnable at a higher watermark. Returns rows eliminated."""
+    return _compact_epochs(
+        store,
+        through_epoch,
+        lambda old: old.groupBy("src", "ctx").agg(F.sum("cnt").alias("cnt")),
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 def apply_edge_delta(
@@ -1853,7 +1592,9 @@ def apply_edge_delta(
     This is the growing-graph state behind continuous communities
     (:func:`communities_read`): at 100 TB the per-tick cost is the
     O(new edges) fold; the edge set — the only state label propagation
-    needs — accumulates without ever rescanning history."""
+    needs — accumulates without ever rescanning history. Unlike
+    walks, edges carry no cross-row structure — ANY batch split is
+    sound, so there is no per-batch completeness contract here."""
     if weight_col is None:
         delta = (
             edges_batch.groupBy(
@@ -1877,30 +1618,6 @@ def apply_edge_delta(
             .agg(F.sum(F.col(weight_col).cast("long")).alias("w"))
         )
     store.upsert(delta.withColumn("epoch_id", F.lit(int(epoch_id))))
-
-
-def stream_graph_edges(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    src: str = "src",
-    dst: str = "dst",
-    weight_col: str | None = None,
-) -> bool:
-    """One AvailableNow tick maintaining the continuous edge store:
-    drain newly landed edge rows and fold each micro-batch into
-    ``store`` via :func:`apply_edge_delta` (the stream_walk_cooccurrence
-    scaffold shape). Unlike walks, edges carry no cross-row structure —
-    ANY batch split is sound, so there is no per-batch completeness
-    contract here."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_edge_delta(store, batch_df, epoch_id, src, dst, weight_col)
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
 
 
 def edges_read(store: MergeTable) -> DataFrame:
@@ -1973,29 +1690,13 @@ def compact_edge_store(store: MergeTable, through_epoch: int) -> int:
     one summed edge set re-keyed at ``through_epoch`` — the
     :func:`compact_cooc_store` contract verbatim: sum-merge makes every
     read invariant under it, ``through_epoch`` must sit strictly below
-    the newest epoch present (the latest epoch may still re-fire), one
-    atomic overwrite, re-runnable at a higher watermark. Returns rows
-    eliminated."""
-    stored = store.read()
-    mx = stored.agg(F.max("epoch_id").alias("m")).first()["m"]
-    if mx is None or through_epoch >= mx:
-        raise ValueError(
-            f"through_epoch must be < the newest epoch present ({mx}); "
-            f"got {through_epoch} — the latest epoch may still re-fire"
-        )
-    old = stored.filter(F.col("epoch_id") <= through_epoch)
-    n_old = old.count()
-    if n_old == 0:
-        return 0
-    merged = (
-        old.groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .withColumn("epoch_id", F.lit(int(through_epoch)))
+    the newest epoch present (enforced), one atomic overwrite,
+    re-runnable at a higher watermark. Returns rows eliminated."""
+    return _compact_epochs(
+        store,
+        through_epoch,
+        lambda old: old.groupBy("src", "dst").agg(F.sum("w").alias("w")),
     )
-    keep = stored.filter(F.col("epoch_id") > through_epoch)
-    n_merged = merged.count()
-    store.overwrite(keep.unionByName(merged.select(*keep.columns)))
-    return n_old - n_merged
 
 
 def stream_resolve_entities(
@@ -2023,8 +1724,7 @@ def stream_resolve_entities(
     the merge sink because its rows ARE its keys (idempotent upsert).
     ``block`` is the blocking Column (e.g. a phonetic key) — the same
     expression must be used across every tick, or history probes stop
-    matching; store and checkpoint are a unit (the stream_kmeans_stats
-    contract)."""
+    matching; store and checkpoint are a unit (see :func:`drain`)."""
     from etl_instagram_spark.operators.entity import (
         incremental_resolve_entities,
     )
@@ -2038,32 +1738,5 @@ def stream_resolve_entities(
         if merges_out is not None:
             merges_out.upsert(merges)
 
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
-    return True
-
-
-def stream_kmeans_stats(
-    spark: SparkSession,
-    landing_dir: str,
-    schema_ddl: str,
-    store: MergeTable,
-    checkpoint_dir: str,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    quant_dp: int = 6,
-) -> bool:
-    """One AvailableNow tick maintaining the k-means sufficient
-    statistics: drain new vector files and fold each micro-batch's
-    per-cell (n, integer sums) into ``store``. Store and checkpoint are
-    a unit (epoch ids restart under a fresh checkpoint); state is
-    O(epochs · k) rows of k·(dim+1) longs — compact with the same
-    collapse-and-rekey rewrite as compact_rollup_partials if epoch
-    count ever matters."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_kmeans_delta(
-            store, batch_df, epoch_id, centroids, vec_col, quant_dp
-        )
-
-    _drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
+    drain(spark, landing_dir, schema_ddl, checkpoint_dir, handle)
     return True

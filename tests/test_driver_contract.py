@@ -191,8 +191,9 @@ def test_replica_rejects_nonscalar_outputs():
     row the driver errored on. Regression-pin with the pre-fix r16
     output shape — a frame carrying an array<float> ``emb`` column."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from oracle_check import nonscalar_columns
 
     prefix_r16_shape = [

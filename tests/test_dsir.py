@@ -147,8 +147,8 @@ def test_stream_dsir_counts_equals_batch_fit_and_replays(spark, tmp_path):
     from etl_instagram_spark.operators.dsir import bucket_counts
     from etl_instagram_spark.streaming.incremental import (
         apply_dsir_delta,
+        drain,
         dsir_read_model,
-        stream_dsir_counts,
     )
 
     def write_json(path, rows):
@@ -164,10 +164,13 @@ def test_stream_dsir_counts_equals_batch_fit_and_replays(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_dsir")
     DDL = "doc_id long, text string"
 
+    def tick(batch_df, epoch_id):
+        apply_dsir_delta(store, batch_df, epoch_id, n_buckets=B)
+
     write_json(landing / "w1.json", wave1)
-    assert stream_dsir_counts(spark, str(landing), DDL, store, ckpt, n_buckets=B)
+    drain(spark, str(landing), DDL, ckpt, tick)
     write_json(landing / "w2.json", wave2)
-    assert stream_dsir_counts(spark, str(landing), DDL, store, ckpt, n_buckets=B)
+    drain(spark, str(landing), DDL, ckpt, tick)
 
     all_rows = spark.createDataFrame(
         [(r["doc_id"], r["text"]) for r in wave1 + wave2], DDL

@@ -102,8 +102,8 @@ from etl_instagram_spark.streaming.incremental import (
     HH_TOTAL_KEY,
     apply_hh_delta,
     compact_hh_summaries,
+    drain,
     heavy_hitters_read,
-    stream_heavy_hitters,
 )
 
 
@@ -204,12 +204,12 @@ def test_stream_heavy_hitters_tick(spark, tmp_path):
         "\n".join(json.dumps({"term": t}) for t in BATCHES[0])
     )
     store = hh_store(spark, tmp_path)
-    stream_heavy_hitters(
+    drain(
         spark,
         str(landing),
         "term string",
-        store,
         str(tmp_path / "ckpt"),
+        lambda b, e: apply_hh_delta(store, b, e),
     )
     got = {r["term"] for r in heavy_hitters_read(store, 25, 1, 10).collect()}
     assert "the" in got and "of" in got
@@ -334,13 +334,12 @@ def test_stream_heavy_hitters_weighted_tick(spark, tmp_path):
         )
     )
     store = hh_store(spark, tmp_path)
-    stream_heavy_hitters(
+    drain(
         spark,
         str(landing),
         "term string, wt long",
-        store,
         str(tmp_path / "ckpt"),
-        weight_col="wt",
+        lambda b, e: apply_hh_delta(store, b, e, weight_col="wt"),
     )
     mass = sum(w for _, w in WEIGHTED_BATCHES[0])
     total = (
@@ -410,7 +409,11 @@ def test_stream_heavy_hitters_second_drain_new_epoch(spark, tmp_path):
     )
     store = hh_store(spark, tmp_path)
     ckpt = str(tmp_path / "ckpt")
-    stream_heavy_hitters(spark, str(landing), "term string", store, ckpt)
+
+    def tick(batch_df, epoch_id):
+        apply_hh_delta(store, batch_df, epoch_id)
+
+    drain(spark, str(landing), "term string", ckpt, tick)
     n_after_first = (
         store.read().filter(F.col("term_key") == HH_TOTAL_KEY)
         .agg(F.sum("n_part")).collect()[0][0]
@@ -420,7 +423,7 @@ def test_stream_heavy_hitters_second_drain_new_epoch(spark, tmp_path):
     (landing / "b1.json").write_text(
         "\n".join(json.dumps({"term": t}) for t in BATCHES[1])
     )
-    stream_heavy_hitters(spark, str(landing), "term string", store, ckpt)
+    drain(spark, str(landing), "term string", ckpt, tick)
     stored = store.read()
     epochs = sorted(
         r["epoch_id"] for r in stored.select("epoch_id").distinct().collect()

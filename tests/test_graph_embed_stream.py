@@ -1,5 +1,5 @@
 """Continuous face for walk co-occurrence (streaming/incremental.py
-apply_cooc_delta / stream_walk_cooccurrence / cooc_read /
+apply_cooc_delta / drain / cooc_read /
 compact_cooc_store): stream==batch over waves of complete walks, the
 read-to-embeddings chain row-identical (every float) to the batch
 chain, replay as a no-op by the epoch key, and compaction with reads
@@ -21,7 +21,7 @@ from etl_instagram_spark.streaming.incremental import (
     apply_cooc_delta,
     compact_cooc_store,
     cooc_read,
-    stream_walk_cooccurrence,
+    drain,
 )
 
 WALK_DDL = "walk_id long, step int, node long"
@@ -134,7 +134,7 @@ def test_compaction_read_invariant_and_guarded(spark, tmp_path):
         compact_cooc_store(store, through_epoch=2)
     # re-runnable at a higher (still valid) watermark: no-op here since
     # epoch 1 already holds the fold
-    assert compact_cooc_store(store, through_epoch=1) >= 0
+    assert compact_cooc_store(store, through_epoch=1) == 0
 
 
 def test_stream_tick_drains_landing_dir(spark, tmp_path):
@@ -160,14 +160,13 @@ def test_stream_tick_drains_landing_dir(spark, tmp_path):
     )
     ckpt = str(tmp_path / "ckpt_cooc")
 
+    def tick(batch_df, epoch_id):
+        apply_cooc_delta(store, batch_df, epoch_id, window=2)
+
     write_json(landing / "w1.json", w1)
-    assert stream_walk_cooccurrence(
-        spark, str(landing), WALK_DDL, store, ckpt, window=2
-    )
+    drain(spark, str(landing), WALK_DDL, ckpt, tick)
     write_json(landing / "w2.json", w2)
-    assert stream_walk_cooccurrence(
-        spark, str(landing), WALK_DDL, store, ckpt, window=2
-    )
+    drain(spark, str(landing), WALK_DDL, ckpt, tick)
 
     all_walks = spark.createDataFrame(w1 + w2, WALK_DDL)
     assert _rows_sorted(cooc_read(store)) == _rows_sorted(

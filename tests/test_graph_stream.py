@@ -1,5 +1,5 @@
 """Continuous face for communities over a growing graph
-(streaming/incremental.py apply_edge_delta / stream_graph_edges /
+(streaming/incremental.py apply_edge_delta / drain /
 edges_read / communities_read / compact_edge_store): the edge store's
 collapse equals the batch multiplicity under any batch split, the
 recompute-per-tick labels are row-identical to batch label_propagation
@@ -22,8 +22,8 @@ from etl_instagram_spark.streaming.incremental import (
     apply_edge_delta,
     communities_read,
     compact_edge_store,
+    drain,
     edges_read,
-    stream_graph_edges,
 )
 
 EDGE_DDL = "src long, dst long"
@@ -156,7 +156,7 @@ def test_compaction_read_invariant_and_guarded(spark, tmp_path):
     ) == [1, 2]
     with pytest.raises(ValueError, match="newest epoch"):
         compact_edge_store(store, through_epoch=2)
-    assert compact_edge_store(store, through_epoch=1) >= 0
+    assert compact_edge_store(store, through_epoch=1) == 0
 
 
 def test_pagerank_read_identical_to_batch(spark, tmp_path):
@@ -212,14 +212,18 @@ def test_stream_tick_drains_landing_dir(spark, tmp_path):
         spark, str(tmp_path / "edges_s"), ["epoch_id", "src", "dst"]
     )
     ckpt = str(tmp_path / "ckpt")
+
+    def tick(batch_df, epoch_id):
+        apply_edge_delta(store, batch_df, epoch_id)
+
     write_json(landing / "w1.json", w1)
-    stream_graph_edges(spark, str(landing), EDGE_DDL, store, ckpt)
+    drain(spark, str(landing), EDGE_DDL, ckpt, tick)
     write_json(landing / "w2.json", w2)
-    stream_graph_edges(spark, str(landing), EDGE_DDL, store, ckpt)
+    drain(spark, str(landing), EDGE_DDL, ckpt, tick)
     all_edges = spark.createDataFrame(sorted(set(w1 + w2)), EDGE_DDL)
     want = _rows_sorted(label_propagation(all_edges, n_rounds=4))
     assert _rows_sorted(communities_read(store, n_rounds=4)) == want
     # drained landing dir: a third tick must not change the store
     before = _rows_sorted(edges_read(store))
-    stream_graph_edges(spark, str(landing), EDGE_DDL, store, ckpt)
+    drain(spark, str(landing), EDGE_DDL, ckpt, tick)
     assert _rows_sorted(edges_read(store)) == before

@@ -1,6 +1,6 @@
 """Independent-engine certification of the continuous k-means surface.
 
-test_streaming.py proves stream_kmeans_stats equals the ENGINE'S OWN
+test_streaming.py proves the apply_kmeans_delta drain equals the ENGINE'S OWN
 batch refine_centroids over any batch split and survives replay; like
 the rollup/CDC surfaces before it, its maintained state had never been
 checked against another engine. Here DuckDB simulates the same epoch

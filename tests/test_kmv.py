@@ -326,13 +326,14 @@ def test_kmv_store_compaction_preserves_reads(spark, tmp_path):
 def test_stream_kmv_sketch_tick_drains_landing_dir(spark, tmp_path):
     """The AvailableNow tick face: two drained waves land in the store
     epoch-keyed, and the read summary equals one batch kmv_summary over
-    everything landed (the stream_hll_registers contract)."""
+    everything landed (the HLL register store's contract)."""
     import json
 
     from etl_instagram_spark.operators.merge import MergeTable
     from etl_instagram_spark.streaming.incremental import (
+        apply_kmv_delta,
+        drain,
         kmv_read_summary,
-        stream_kmv_sketch,
     )
 
     def write_json(path, rows):
@@ -350,14 +351,13 @@ def test_stream_kmv_sketch_tick_drains_landing_dir(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_kmv")
     DDL = "g string, v string"
 
+    def tick(batch_df, epoch_id):
+        apply_kmv_delta(store, batch_df, epoch_id, "v", ["g"], k=64)
+
     write_json(landing / "w1.json", wave1)
-    assert stream_kmv_sketch(
-        spark, str(landing), DDL, store, ckpt, "v", ["g"], k=64
-    )
+    drain(spark, str(landing), DDL, ckpt, tick)
     write_json(landing / "w2.json", wave2)
-    assert stream_kmv_sketch(
-        spark, str(landing), DDL, store, ckpt, "v", ["g"], k=64
-    )
+    drain(spark, str(landing), DDL, ckpt, tick)
 
     all_rows = spark.createDataFrame(
         [(r["g"], r["v"]) for r in wave1 + wave2], DDL

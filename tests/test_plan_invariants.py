@@ -249,8 +249,6 @@ def test_semantic_dedup_candidates_are_an_equi_join(spark):
     """semantic_dedup_pairs must plan a hash/sort-merge join keyed on
     the cell id (the id inequality riding as a join condition) — the
     O(Σ cell²)-not-O(n²) claim, pinned at the plan level."""
-    from pyspark.sql import functions as F
-
     from etl_instagram_spark.operators.dedup import semantic_dedup_pairs
     from etl_instagram_spark.operators.similarity import fit_ivf_centroids
 
@@ -305,8 +303,6 @@ def test_pq_stored_codes_scan_never_reads_raw_vectors(spark, tmp_path):
     reads (id, code) ONLY — never the raw embedding column. That narrow
     read IS product quantization's 100-TB payoff (m bytes/row vs
     dim×4), so it is pinned at the plan level."""
-    from pyspark.sql import functions as F
-
     from etl_instagram_spark.operators.similarity import (
         ann_pq_topk,
         fit_pq_codebooks,

@@ -90,8 +90,9 @@ def test_expression_serving_matches_model_math(spark):
 
 
 _ISOLATED_TRANSFORM_SCRIPT = r"""
-import math, sys
-sys.path[:0] = ["/root/repo", "/root/repo/tests"]
+import math, os, sys
+root = sys.argv[1]  # the checkout under test
+sys.path[:0] = [root, os.path.join(root, "tests")]
 from pyspark.sql import functions as F
 from etl_instagram_spark.session import get_spark
 from etl_instagram_spark.enrich.quality_model import (
@@ -137,15 +138,17 @@ def test_ml_transform_matches_expression_serving_isolated():
     import os
     import subprocess
     import sys
+    from pathlib import Path
 
+    root = str(Path(__file__).resolve().parents[1])
     env = dict(os.environ, SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
-        [sys.executable, "-c", _ISOLATED_TRANSFORM_SCRIPT],
+        [sys.executable, "-c", _ISOLATED_TRANSFORM_SCRIPT, root],
         capture_output=True,
         text=True,
         timeout=300,
         env=env,
-        cwd="/root/repo",
+        cwd=root,
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "TRANSFORM_PARITY_OK" in proc.stdout

@@ -115,8 +115,8 @@ def test_stream_hll_equals_batch_and_replays(spark, tmp_path):
     from etl_instagram_spark.operators.merge import MergeTable
     from etl_instagram_spark.streaming.incremental import (
         apply_hll_delta,
+        drain,
         hll_read_summary,
-        stream_hll_registers,
     )
 
     def write_json(path, rows):
@@ -134,10 +134,13 @@ def test_stream_hll_equals_batch_and_replays(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_hll")
     DDL = "k string, v long"
 
+    def tick(batch_df, epoch_id):
+        apply_hll_delta(store, batch_df, epoch_id, "v", ["k"])
+
     write_json(landing / "w1.json", wave1)
-    assert stream_hll_registers(spark, str(landing), DDL, store, ckpt, "v", ["k"])
+    drain(spark, str(landing), DDL, ckpt, tick)
     write_json(landing / "w2.json", wave2)
-    assert stream_hll_registers(spark, str(landing), DDL, store, ckpt, "v", ["k"])
+    drain(spark, str(landing), DDL, ckpt, tick)
 
     all_rows = spark.createDataFrame(
         [(r["k"], r["v"]) for r in wave1 + wave2], DDL

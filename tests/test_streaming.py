@@ -242,7 +242,7 @@ def test_continuous_rollup_parity_and_replay_idempotence(spark, tmp_path):
     from etl_instagram_spark.streaming.incremental import (
         apply_rollup_delta,
         continuous_rollup_read,
-        stream_continuous_rollup,
+        drain,
     )
 
     EVENT_DDL = "ts TIMESTAMP, event_type STRING, value DOUBLE"
@@ -260,10 +260,13 @@ def test_continuous_rollup_parity_and_replay_idempotence(spark, tmp_path):
         {"ts": f"2024-05-{d:02d}T06:15:00Z", "event_type": "click", "value": 5.0}
         for d in (1, 2, 8)  # same day, next day, next week
     ]
+    def tick(batch_df, epoch_id):
+        apply_rollup_delta(partials, batch_df, epoch_id)
+
     write_json(landing / "w1.json", wave1)
-    assert stream_continuous_rollup(spark, str(landing), EVENT_DDL, partials, ckpt)
+    drain(spark, str(landing), EVENT_DDL, ckpt, tick)
     write_json(landing / "w2.json", wave2)
-    assert stream_continuous_rollup(spark, str(landing), EVENT_DDL, partials, ckpt)
+    drain(spark, str(landing), EVENT_DDL, ckpt, tick)
 
     all_events = spark.createDataFrame(
         [(r["ts"].replace("T", " ").replace("Z", ""), r["event_type"], r["value"]) for r in wave1 + wave2],
@@ -698,8 +701,8 @@ def test_stream_kmeans_stats_equals_batch_refine_and_replays(spark, tmp_path):
     from etl_instagram_spark.operators.clustering import refine_centroids
     from etl_instagram_spark.streaming.incremental import (
         apply_kmeans_delta,
+        drain,
         kmeans_read_centroids,
-        stream_kmeans_stats,
     )
 
     dim = 4
@@ -716,10 +719,13 @@ def test_stream_kmeans_stats_equals_batch_refine_and_replays(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt_km")
     DDL = "vec_id long, embedding array<double>"
 
+    def tick(batch_df, epoch_id):
+        apply_kmeans_delta(store, batch_df, epoch_id, cents, quant_dp=6)
+
     write_json(landing / "w1.json", wave1)
-    assert stream_kmeans_stats(spark, str(landing), DDL, store, ckpt, cents, quant_dp=6)
+    drain(spark, str(landing), DDL, ckpt, tick)
     write_json(landing / "w2.json", wave2)
-    assert stream_kmeans_stats(spark, str(landing), DDL, store, ckpt, cents, quant_dp=6)
+    drain(spark, str(landing), DDL, ckpt, tick)
 
     got = kmeans_read_centroids(store, cents)
     all_rows = spark.createDataFrame(
