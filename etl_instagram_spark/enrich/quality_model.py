@@ -27,8 +27,6 @@ fit/serve split:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -135,7 +133,3 @@ def quality_model_filter(
     return df.filter(
         quality_model_score(F.col(text_col), weights, bias) >= min_score
     )
-
-
-def _sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))

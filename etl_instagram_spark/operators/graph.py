@@ -70,6 +70,60 @@ PAGERANK_SCALE = 10**12
 PAGERANK_DAMPING = (17, 20)
 
 
+def _sum_weights(e: DataFrame) -> DataFrame:
+    """(src, dst, w) rows → one row per (src, dst) with the summed
+    weight and ``__nulls``, the count of NULL input weights, which
+    :func:`_weight_bounds` rejects: sum/min/max skip NULLs, so a NULL
+    weight's edge would otherwise silently contribute nothing."""
+    return e.groupBy("src", "dst").agg(
+        F.sum("w").alias("w"),
+        F.sum(
+            F.when(F.col("w").isNull(), F.lit(1)).otherwise(F.lit(0))
+        ).alias("__nulls"),
+    )
+
+
+def _weight_bounds(
+    e: DataFrame, who: str, weight_col: str, by: str | None = None
+) -> tuple[int | None, int | None]:
+    """The one weighted-edge check (walks, pagerank, label
+    propagation): a bounded agg over the pinned :func:`_sum_weights`
+    frame ``e`` that rejects NULL and non-positive weights. Returns
+    (max weight, None); with ``by`` the same pass first groups by that
+    key and returns (max weight, largest group's row count) — the
+    walk's max out-degree at no extra pass. Both are None on an empty
+    frame; each caller keeps its own int64 bound on top."""
+    aggs = [
+        F.min("w").alias("lo"),
+        F.max("w").alias("hi"),
+        F.sum("__nulls").alias("nulls"),
+    ]
+    if by is None:
+        b = e.agg(*aggs).collect()[0]
+    else:
+        b = (
+            e.groupBy(by)
+            .agg(F.count(F.lit(1)).alias("n"), *aggs)
+            .agg(
+                F.max("n").alias("n"),
+                F.min("lo").alias("lo"),
+                F.max("hi").alias("hi"),
+                F.sum("nulls").alias("nulls"),
+            )
+            .collect()[0]
+        )
+    if b["nulls"] is not None and b["nulls"] > 0:
+        raise ValueError(
+            f"{who}: {b['nulls']} edge row(s) have NULL {weight_col!r} — "
+            "filter or fill them explicitly"
+        )
+    if b["lo"] is not None and b["lo"] <= 0:
+        raise ValueError(
+            f"{who}: weights must be positive ints, got min {b['lo']}"
+        )
+    return b["hi"], (b["n"] if by is not None else None)
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -163,43 +217,21 @@ def pagerank(
             .withColumn("w", F.lit(1).cast("long"))
         )
     else:
-        e = (
+        e = _sum_weights(
             edges.select(
                 F.col(src).cast("long").alias("src"),
                 F.col(dst).cast("long").alias("dst"),
                 F.col(weight_col).cast("long").alias("w"),
             )
-            .groupBy("src", "dst")
-            .agg(
-                F.sum("w").alias("w"),
-                # count NULL input weights per pair so the bounds agg can
-                # reject them: min/max ignore NULLs, and a NULL weight's
-                # edge would otherwise silently contribute nothing
-                F.sum(
-                    F.when(F.col("w").isNull(), F.lit(1)).otherwise(F.lit(0))
-                ).alias("__nulls"),
-            )
         )
     # pin the big side's layout once; every round's join reuses it
     e = e.repartition(F.col("src")).localCheckpoint(eager=True)
     if weight_col is not None:
-        bounds = e.agg(
-            F.min("w").alias("lo"),
-            F.max("w").alias("hi"),
-            F.sum("__nulls").alias("nulls"),
-        ).collect()[0]
-        if bounds["nulls"] is not None and bounds["nulls"] > 0:
+        hi, _ = _weight_bounds(e, "pagerank", weight_col)
+        if hi is not None and hi > (2**63 - 1) // scale:
             raise ValueError(
-                f"pagerank: {bounds['nulls']} edge row(s) have NULL "
-                f"{weight_col!r} — NULL weights would silently drop their "
-                "edges' contributions; filter or fill them explicitly"
-            )
-        if bounds["lo"] is not None and (
-            bounds["lo"] <= 0 or bounds["hi"] > (2**63 - 1) // scale
-        ):
-            raise ValueError(
-                f"edge weights must be in [1, {(2**63 - 1) // scale}] "
-                f"(rank·w must fit int64), got [{bounds['lo']}, {bounds['hi']}]"
+                f"pagerank: edge weights must be <= {(2**63 - 1) // scale} "
+                f"(rank·w must fit int64), got max {hi}"
             )
         e = e.drop("__nulls")
     # power-law guard: find sources whose adjacency exceeds the salt
@@ -659,55 +691,75 @@ def random_walks(
     max_degree: int | None = None,
     weight_col: str | None = None,
     checkpoint_every: int = 8,
+    return_w: int = 1,
+    common_w: int = 1,
+    far_w: int = 1,
 ) -> DataFrame:
-    """Deterministic uniform random walks — one walk started at EVERY
-    node, ``walk_len`` steps, the corpus-generation shape under
-    DeepWalk/node2vec (Perozzi KDD'14; p=q=1 unbiased case): the walk
+    """Deterministic random walks — one walk started at EVERY node,
+    ``walk_len`` steps: the corpus-generation shape under DeepWalk
+    (Perozzi KDD'14) and node2vec (Grover & Leskovec KDD'16), whose walk
     sequences are the "sentences" a skip-gram embedding trains on.
 
     Spark-first and REPLAYABLE-BY-CONSTRUCTION: there is no RNG state —
-    step i from node v follows neighbor index
-    ``hash32(seed ⊕ walk_id ⊕ i) mod outdeg(v)`` over v's SORTED
-    neighbor array, so every step is a pure function of (graph, seed),
-    identical under any partitioning, re-run, or engine (the
-    functions/text.hash32 md5 kernel; DuckDB mirror
-    :func:`random_walks_sql`). A walk that reaches a dangling node
-    (no out-edges) stops there — shorter walks are emitted, not padded.
+    step i from node v draws ``pick = hash32(seed ⊕ walk_id ⊕ i)`` and
+    indexes v's SORTED neighbor array with it, so every step is a pure
+    function of (graph, seed), identical under any partitioning,
+    re-run, or engine (the functions/text.hash32 md5 kernel; DuckDB
+    mirrors :func:`random_walks_sql` and :func:`node2vec_walks_sql`). A
+    walk that reaches a dangling node (no out-edges) stops there —
+    shorter walks are emitted, not padded.
 
     Output: (walk_id, step, node) with step 0 = the start node and
     walk_id = the start node id.
 
+    FIRST-ORDER walks (the default α = (1, 1, 1): DeepWalk, i.e.
+    node2vec at p = q = 1) follow ``nbrs[pick mod outdeg(v)]``.
+    ``weight_col`` switches to WEIGHTED walks: r = pick mod W(v) picks
+    the neighbor whose cumulative-weight interval contains r, so
+    P(v→u) = w(v,u)/W(v). Duplicate (src, dst) rows sum their weights;
+    weights must be positive ints (one bounded agg, NULLs rejected).
+    The adjacency row carries the dst-ordered prefix sums, built once
+    with an O(k²) in-array aggregate; w = 1 everywhere reduces to the
+    unweighted formula bit-for-bit.
+
+    SECOND-ORDER biased walks (node2vec): from step 2 on, with previous
+    node ``prev``, each neighbor x of the current node weighs
+
+        return_w  if x == prev            (node2vec α = 1/p)
+        common_w  if x ∈ out-nbrs(prev)   (α = 1, the triangle step)
+        far_w     otherwise               (α = 1/q)
+
+    times w(cur→x) when weighted. The α are NON-NEGATIVE INTEGERS
+    (express 1/p : 1 : 1/q as an integer ratio — p=1, q=0.5 → (1, 1,
+    2); p=4, q=1 → (1, 4, 4)), so the interval pick over the per-step
+    prefix sums stays exact int64. Step 1 has no prev and takes the
+    first-order pick. A step whose total weight is 0 (return_w = 0 with
+    prev the only neighbor — the non-backtracking configuration) STOPS
+    the walk, like a dangling node. The classic node2vec semantics
+    assume a symmetrized edge list; pass one (union the reverse) when
+    the input is directed. At α = (1, 1, 1) no prev state is carried
+    and no per-step weights are built.
+
+    Per-step weight sums are guarded loudly at setup: max capped
+    out-degree × max α × max edge weight must fit int64 (exact Python
+    ints), so Spark cannot silently wrap where the DuckDB mirrors'
+    ::BIGINT casts error.
+
     Scale: adjacency is one groupBy into per-node sorted neighbor
-    arrays; each step is one key-equi join of the O(nodes) frontier
-    against the adjacency table. ``walk_len`` joins total, frontier
-    never grows. ``max_degree`` is the ENFORCED hub cap: each node's
-    sorted neighbor array is truncated to its first ``max_degree``
-    entries (the deterministic sorted prefix, so truncation is a pure
-    function of the graph — identical under any partitioning and
-    mirrored verbatim by :func:`random_walks_sql`). Without a cap a
-    super-node's ``collect_list`` row is bounded only by its degree —
-    on power-law graphs set ``max_degree`` to keep per-row adjacency
-    state O(cap). Capping biases walks at capped hubs toward their
-    smallest-id neighbors (documented, deterministic); leave ``None``
-    only when the caller knows degrees are bounded.
-
-    ``weight_col`` switches to WEIGHTED walks (node2vec-style intensity
-    bias at p=q=1): step i from v picks r = hash32(…) mod W(v) and
-    follows the neighbor whose cumulative-weight interval contains r —
-    P(v→u) = w(v,u)/W(v), still a pure function of (graph, seed).
-    Duplicate (src, dst) rows sum their weights; weights must be
-    positive ints (validated with one bounded agg, NULLs rejected).
-    The adjacency row carries the dst-ordered prefix-sum array, built
-    with an O(k²) in-array aggregate — bounded by ``max_degree``, which
-    matters more here (set it). Unweighted walks (w = 1 everywhere)
-    are the special case where the interval walk reduces to
-    ``pick mod outdeg`` — the exact unweighted formula.
-
-    The walk accumulates in-row (r18): each step is one left join of
-    the O(nodes) frontier against adj inside a single pipelined DAG —
-    no per-step materialization barrier — with ``checkpoint_every``
-    truncating lineage for long walks and one final eager checkpoint
-    pinning the corpus for multi-scan downstream consumers."""
+    arrays; each step is one left join of the O(nodes) frontier against
+    it (the second-order frontier carries prev's neighbor array forward
+    from the previous step's join for the distance-1 membership test).
+    The frontier never grows and accumulates the walk path in-row, so
+    the whole walk is ONE pipelined DAG with a single posexplode and one
+    final eager checkpoint pinning the corpus for multi-scan consumers;
+    ``checkpoint_every`` truncates lineage for long walks.
+    ``max_degree`` is the ENFORCED hub cap: each node's sorted neighbor
+    array is truncated to its first ``max_degree`` entries (the
+    deterministic sorted prefix, mirrored verbatim in SQL). Without a
+    cap a super-node's adjacency row, and the O(cap²) in-array prefix
+    work, is bounded only by its degree — on power-law graphs set it.
+    Capping biases walks at capped hubs toward their smallest-id
+    neighbors (documented, deterministic)."""
     if walk_len < 1:
         raise ValueError(f"walk_len must be >= 1, got {walk_len}")
     if max_degree is not None and max_degree < 1:
@@ -716,14 +768,22 @@ def random_walks(
         raise ValueError(
             f"checkpoint_every must be >= 1, got {checkpoint_every}"
         )
+    alpha = (return_w, common_w, far_w)
+    if any((not isinstance(a, int)) or a < 0 for a in alpha):
+        raise ValueError(
+            f"node2vec weights must be non-negative ints, got {alpha}"
+        )
+    if max(alpha) < 1:
+        raise ValueError("node2vec weights must not all be zero")
+    second_order = alpha != (1, 1, 1)
     from etl_instagram_spark.functions.text import hash32
 
+    # the edge list is pinned: the bounds, adj and the walk-start node
+    # set all read it, and without the pin each re-runs the caller's
+    # full upstream edge lineage (for bipartite_order_edges that is the
+    # orders⋈lineitem join)
+    max_w, deg = 1, max_degree
     if weight_col is None:
-        # pinned like the weighted branch below: adj, the step-1
-        # frontier checkpoint, and the walk-start node set all read the
-        # distinct edge list, and without the pin each re-runs the
-        # caller's full upstream edge lineage (for bipartite_order_edges
-        # that is the orders⋈lineitem join, three times over)
         e = (
             edges.select(
                 F.col(src).cast("long").alias("src"),
@@ -733,68 +793,37 @@ def random_walks(
             .localCheckpoint(eager=True)
         )
     else:
-        e = (
+        e = _sum_weights(
             edges.select(
                 F.col(src).cast("long").alias("src"),
                 F.col(dst).cast("long").alias("dst"),
                 F.col(weight_col).cast("long").alias("w"),
             )
-            .groupBy("src", "dst")
-            .agg(
-                F.sum("w").alias("w"),
-                F.sum(
-                    F.when(F.col("w").isNull(), F.lit(1)).otherwise(F.lit(0))
-                ).alias("__nulls"),
-            )
-            .localCheckpoint(eager=True)
+        ).localCheckpoint(eager=True)
+        # uncapped, the same pass reads the max out-degree too
+        max_w, n = _weight_bounds(
+            e, "random_walks", weight_col,
+            by="src" if max_degree is None else None,
         )
-        # one two-stage agg: per-src degree/extremes, then global — the
-        # degree bound feeds the int64 check below
-        bounds = (
-            e.groupBy("src")
-            .agg(
-                F.count(F.lit(1)).alias("d"),
-                F.min("w").alias("lo"),
-                F.max("w").alias("hi"),
-                F.sum("__nulls").alias("nulls"),
-            )
-            .agg(
-                F.max("d").alias("deg"),
-                F.min("lo").alias("lo"),
-                F.max("hi").alias("hi"),
-                F.sum("nulls").alias("nulls"),
-            )
-            .collect()[0]
-        )
-        if bounds["nulls"] is not None and bounds["nulls"] > 0:
-            raise ValueError(
-                f"random_walks: {bounds['nulls']} edge row(s) have NULL "
-                f"{weight_col!r} — filter or fill them explicitly"
-            )
-        if bounds["lo"] is not None and bounds["lo"] <= 0:
-            raise ValueError(
-                f"random_walks: weights must be positive ints, got min "
-                f"{bounds['lo']}"
-            )
-        # the interval pick sums weights per node (cumw[-1]); a silent
-        # int64 overflow on the Spark side would desync from the DuckDB
-        # mirror (whose ::BIGINT cast errors instead). Bound it the way
-        # pagerank bounds rank·w: max capped degree × max weight must
-        # fit int64 — conservative, checked in exact Python ints.
-        if bounds["deg"] is not None and bounds["hi"] is not None:
-            eff_deg = (
-                min(int(bounds["deg"]), max_degree)
-                if max_degree is not None
-                else int(bounds["deg"])
-            )
-            if eff_deg * int(bounds["hi"]) > 2**63 - 1:
-                raise ValueError(
-                    "random_walks: per-node cumulative weight could "
-                    f"overflow int64 (max out-degree {eff_deg} × max "
-                    f"weight {bounds['hi']}) — cap max_degree or "
-                    "rescale weights"
-                )
+        deg = max_degree or n
         e = e.drop("__nulls")
+    # int64 bound on the per-step weight sum (max out-degree × max α ×
+    # max edge weight), checked before any sum is built. An unweighted
+    # first-order walk sums nothing; a capped walk reads its real
+    # degree only when the static cap is too coarse.
+    top_w = max(alpha) * (max_w or 1)
+    if top_w > 1 and (deg is None or deg * top_w > 2**63 - 1):
+        # per-src counts, top-1: no second shuffle for a global max
+        hub = e.groupBy("src").count().orderBy(F.desc("count")).first()
+        deg = hub and hub["count"]
+        if deg and max_degree is not None:
+            deg = min(deg, max_degree)
+    if deg is not None and deg * top_w > 2**63 - 1:
+        raise ValueError(
+            "random_walks: per-step weight sum could overflow int64 "
+            f"(max out-degree {deg} × max α {max(alpha)} × max edge "
+            f"weight {max_w}) — cap max_degree or rescale weights"
+        )
     ecap = e
     if max_degree is not None:
         # cap BEFORE collecting: row_number streams through the sorted
@@ -843,24 +872,34 @@ def random_walks(
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    # the frontier carries the whole walk as an in-row array (r18, the
-    # node2vec_walks discipline): one posexplode at the end replaces
-    # the per-step union of (walk_id, step, node) slices, and because
-    # each step's only consumer is the next step the per-step eager
-    # localCheckpoint barrier goes away — the whole walk is ONE
-    # pipelined DAG of left joins against the checkpointed adj. A walk
-    # that reaches a dangling node sets node to NULL and rides through
-    # with its path intact (same emitted rows as the old inner-join
-    # drop). ``checkpoint_every`` bounds lineage for long walks; one
-    # final eager checkpoint pins the corpus for multi-scan consumers
-    # (cooc → PPMI → embeddings re-reads it several times).
+    # second-order transition weights, dst-sorted like nbrs: α(x), times
+    # the edge weight read back off the prefix sums when weighted
+    alpha_x = (
+        f"cast(CASE WHEN x = prev THEN {return_w}"
+        f" WHEN array_contains(nbrs_prev, x) THEN {common_w}"
+        f" ELSE {far_w} END AS bigint)"
+    )
+    if weight_col is None:
+        wts = f"transform(nbrs, x -> {alpha_x})"
+    else:
+        wts = (
+            f"transform(nbrs, (x, i) -> {alpha_x}"
+            " * (cumw[i] - if(i = 0, 0, cumw[i - 1])))"
+        )
+    # the frontier carries the whole walk as an in-row array (r18): one
+    # posexplode at the end replaces a per-step union of (walk_id,
+    # step, node) slices, and because each step's only consumer is the
+    # next step there is no per-step materialization barrier — the walk
+    # is ONE pipelined DAG of left joins against the checkpointed adj.
+    # A finished walk (dangling node, or total weight 0) sets node to
+    # NULL and rides through with its path intact.
     # The frontier is spread over defaultParallelism up front (r19):
     # AQE rightly coalesces the tiny node-set exchange to one
-    # partition, but that serializes the walk pipeline's in-array
-    # per-row work (O(cap²) per step) onto a single task; one cheap
-    # round-robin shuffle of the O(nodes) frontier parallelizes every
-    # step. Row placement cannot change values — each walk is a pure
-    # per-row function of (walk_id, adj).
+    # partition, but that serializes the per-row in-array work (O(cap²)
+    # per step) onto a single task; one cheap round-robin shuffle of
+    # the O(nodes) frontier parallelizes every step. Row placement
+    # cannot change values — each walk is a pure per-row function of
+    # (walk_id, adj).
     frontier = nodes.repartition(
         edges.sparkSession.sparkContext.defaultParallelism
     ).select(
@@ -877,33 +916,43 @@ def random_walks(
                 F.lit(str(i)),
             )
         )
-        if weight_col is None:
-            alive = F.col("nbrs").isNotNull()
-            nxt = F.when(
-                alive,
-                F.element_at(
-                    "nbrs", (pick % F.size("nbrs") + 1).cast("int")
+        step = frontier.join(adj, "node", "left")
+        if second_order and i > 1:
+            step = step.withColumn("__wts", F.expr(wts)).withColumn(
+                "__cumw",
+                F.expr(
+                    "transform(__wts, (x, i) -> aggregate("
+                    " slice(__wts, 1, i + 1), cast(0 as bigint),"
+                    " (acc, y) -> acc + y))"
                 ),
             )
+            # a 0 total (weight-0 stop) and a NULL one (finished walk)
+            # both fall to the otherwise-NULL branch; CASE short-circuits,
+            # so the ANSI-mode ``% 0`` path is never evaluated
+            cum, alive = "__cumw", F.element_at("__cumw", -1) > 0
+        elif weight_col is not None:
+            cum, alive = "cumw", F.col("cumw").isNotNull()
         else:
-            alive = F.col("cumw").isNotNull()
-            r = pick % F.element_at("cumw", -1)
-            nxt = F.when(
-                alive,
-                F.element_at(
-                    "nbrs",
-                    (
-                        F.size(F.filter("cumw", lambda c: c <= r)) + 1
-                    ).cast("int"),
-                ),
-            )
-        frontier = frontier.join(adj, "node", "left").select(
+            cum, alive = None, F.col("nbrs").isNotNull()
+        if cum is None:
+            idx = pick % F.size("nbrs") + 1
+        else:
+            r = pick % F.element_at(cum, -1)
+            idx = F.size(F.filter(cum, lambda c: c <= r)) + 1
+        nxt = F.when(alive, F.element_at("nbrs", idx.cast("int")))
+        cols = [
             "walk_id",
             nxt.alias("node"),
             F.when(alive, F.concat("path", F.array(nxt)))
             .otherwise(F.col("path"))
             .alias("path"),
-        )
+        ]
+        if second_order and i < walk_len:
+            cols += [
+                F.when(alive, F.col("node")).alias("prev"),
+                F.when(alive, F.col("nbrs")).alias("nbrs_prev"),
+            ]
+        frontier = step.select(*cols)
         if i % checkpoint_every == 0 and i < walk_len:
             frontier = frontier.localCheckpoint(eager=True)
     return frontier.localCheckpoint(eager=True).select(
@@ -1235,7 +1284,7 @@ def label_propagation(
             .filter(F.col("src") != F.col("dst"))
         )
         # undirected weight = sum over duplicates AND both directions
-        sym = (
+        sym = _sum_weights(
             e.unionByName(
                 e.select(
                     F.col("dst").alias("src"),
@@ -1243,31 +1292,8 @@ def label_propagation(
                     "w",
                 )
             )
-            .groupBy("src", "dst")
-            .agg(
-                F.sum("w").alias("w"),
-                F.sum(
-                    F.when(F.col("w").isNull(), F.lit(1)).otherwise(
-                        F.lit(0)
-                    )
-                ).alias("__nulls"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        bounds = sym.agg(
-            F.min("w").alias("lo"),
-            F.sum("__nulls").alias("nulls"),
-        ).collect()[0]
-        if bounds["nulls"] is not None and bounds["nulls"] > 0:
-            raise ValueError(
-                f"label_propagation: {bounds['nulls']} edge row(s) have "
-                f"NULL {weight_col!r} — filter or fill them explicitly"
-            )
-        if bounds["lo"] is not None and bounds["lo"] <= 0:
-            raise ValueError(
-                f"label_propagation: weights must be positive ints, got "
-                f"min {bounds['lo']}"
-            )
+        ).localCheckpoint(eager=True)
+        _weight_bounds(sym, "label_propagation", weight_col)
         # the per-node vote sum is bounded by total incident weight —
         # checked loudly in exact ints (the random_walks convention)
         inc = (
@@ -1371,289 +1397,6 @@ def label_propagation_sql(
     return ",\n".join(parts)
 
 
-def node2vec_walks(
-    edges: DataFrame,
-    walk_len: int = 4,
-    seed: str = "n2v",
-    src: str = "src",
-    dst: str = "dst",
-    return_w: int = 1,
-    common_w: int = 1,
-    far_w: int = 1,
-    max_degree: int | None = None,
-    weight_col: str | None = None,
-    checkpoint_every: int = 8,
-) -> DataFrame:
-    """Deterministic SECOND-ORDER biased walks (node2vec, Grover &
-    Leskovec KDD'16): step i from ``cur`` with previous node ``prev``
-    weights each neighbor x of cur by
-
-        return_w  if x == prev            (node2vec α = 1/p)
-        common_w  if x ∈ out-nbrs(prev)   (α = 1, the triangle step)
-        far_w     otherwise               (α = 1/q)
-
-    ``weight_col`` switches to the WEIGHTED node2vec of the paper:
-    each neighbor's transition weight is α(x) · w(cur→x) with w
-    positive ints (duplicate (src, dst) rows sum, NULL/non-positive
-    rejected — the random_walks weighted contract), still pure int64;
-    step 1 follows raw edge weights (the exact first-order weighted
-    formula), so α = (1, 1, 1) on a weighted graph reduces
-    BIT-IDENTICALLY to ``random_walks(weight_col=...)`` at the same
-    seed (pinned by test).
-
-    expressed as NON-NEGATIVE INTEGERS (express 1/p : 1 : 1/q as an
-    integer ratio — e.g. p=1, q=0.5 → (1, 1, 2); p=4, q=1 →
-    (1, 4, 4)), so the cumulative-weight interval pick stays exact
-    int64 arithmetic and the walk corpus is a pure function of
-    (graph, seed) — replayable under any partitioning or engine (the
-    random_walks discipline; DuckDB mirror :func:`node2vec_walks_sql`).
-    Step 1 has no ``prev`` and picks uniformly (``pick mod outdeg``,
-    the exact first-order formula). A step whose total weight is 0
-    (e.g. return_w = 0 with prev the only neighbor — the
-    non-backtracking configuration) STOPS the walk, like a dangling
-    node. The classic node2vec semantics assume a symmetrized edge
-    list; pass one (union the reverse) when the input is directed.
-
-    Output: (walk_id, step, node) — the random_walks schema, so the
-    co-occurrence → PPMI → embedding chain (operators/graph_embed.py)
-    composes unchanged.
-
-    Scale: adjacency is the same one-groupBy sorted-neighbor table as
-    random_walks (``max_degree`` sorted-prefix cap included); each
-    step joins the O(nodes) frontier against it ONCE — the frontier
-    carries prev's neighbor array forward from the previous step's
-    join (r17; the distance-1 membership test reads that carried
-    array, halving the per-step join count at the price of ≤ cap
-    longs per frontier row) — and the per-row weight/prefix-sum work
-    is in-array O(cap²). The frontier never grows in row count, and
-    it accumulates the walk path in-row (r18), so the whole walk is
-    ONE pipelined DAG of left joins against the checkpointed adj with
-    a single posexplode at the end — no per-step materialization
-    barrier; ``checkpoint_every`` truncates lineage for long walks
-    (every k steps, never needed at typical walk_len ≤ 8)."""
-    if walk_len < 1:
-        raise ValueError(f"walk_len must be >= 1, got {walk_len}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if max_degree is not None and max_degree < 1:
-        raise ValueError(f"max_degree must be >= 1, got {max_degree}")
-    ws = (return_w, common_w, far_w)
-    if any((not isinstance(w, int)) or w < 0 for w in ws):
-        raise ValueError(
-            f"node2vec weights must be non-negative ints, got {ws}"
-        )
-    if max(ws) < 1:
-        raise ValueError("node2vec weights must not all be zero")
-    from etl_instagram_spark.functions.text import hash32
-
-    max_ew = 1  # max edge weight for the int64 bound (1 when unweighted)
-    if weight_col is None:
-        # pinned for the same reason as random_walks: adj, the step-1
-        # checkpoint, and the node set would each re-run the caller's
-        # edge lineage otherwise
-        e = (
-            edges.select(
-                F.col(src).cast("long").alias("src"),
-                F.col(dst).cast("long").alias("dst"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    else:
-        e = (
-            edges.select(
-                F.col(src).cast("long").alias("src"),
-                F.col(dst).cast("long").alias("dst"),
-                F.col(weight_col).cast("long").alias("w"),
-            )
-            .groupBy("src", "dst")
-            .agg(
-                F.sum("w").alias("w"),
-                F.sum(
-                    F.when(F.col("w").isNull(), F.lit(1)).otherwise(F.lit(0))
-                ).alias("__nulls"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        bounds = (
-            e.agg(
-                F.min("w").alias("lo"),
-                F.max("w").alias("hi"),
-                F.sum("__nulls").alias("nulls"),
-            )
-        ).collect()[0]
-        if bounds["nulls"] is not None and bounds["nulls"] > 0:
-            raise ValueError(
-                f"node2vec_walks: {bounds['nulls']} edge row(s) have NULL "
-                f"{weight_col!r} — filter or fill them explicitly"
-            )
-        if bounds["lo"] is not None and bounds["lo"] <= 0:
-            raise ValueError(
-                f"node2vec_walks: weights must be positive ints, got min "
-                f"{bounds['lo']}"
-            )
-        if bounds["hi"] is not None:
-            max_ew = int(bounds["hi"])
-        e = e.drop("__nulls")
-    ecap = e
-    if max_degree is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("src").orderBy("dst")
-        ecap = (
-            e.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_degree)
-            .drop("__rn")
-        )
-    if weight_col is None:
-        adj = (
-            ecap.groupBy(F.col("src").alias("node"))
-            .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # dst-ordered parallel arrays + inclusive raw-weight prefix
-        # sums (cumw0 drives the first-order step-1 pick) — the
-        # random_walks weighted adjacency shape
-        adj = (
-            ecap.groupBy(F.col("src").alias("node"))
-            .agg(
-                F.sort_array(F.collect_list(F.struct("dst", "w"))).alias(
-                    "__a"
-                )
-            )
-            .select(
-                "node",
-                F.expr("transform(__a, x -> x.dst)").alias("nbrs"),
-                F.expr("transform(__a, x -> x.w)").alias("ews"),
-                F.expr(
-                    "transform(__a, (x, i) -> aggregate("
-                    " slice(__a, 1, i + 1), cast(0 as bigint),"
-                    " (acc, y) -> acc + y.w))"
-                ).alias("cumw0"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    # loud int64 bound for the per-step weight sum, the random_walks
-    # convention: max capped degree × max edge weight × max α in exact
-    # Python ints. With a max_degree cap the degree bound is static —
-    # no data touched; only the uncapped path pays one bounded
-    # aggregation for the real max degree.
-    if max_degree is not None:
-        deg = max_degree
-    else:
-        deg = adj.agg(F.max(F.size("nbrs")).alias("d")).collect()[0]["d"]
-    if deg is not None and int(deg) * max(ws) * max_ew > 2**63 - 1:
-        raise ValueError(
-            f"node2vec_walks: per-step weight sum could overflow int64 "
-            f"(max degree {deg} × max α {max(ws)} × max edge weight "
-            f"{max_ew}) — cap max_degree or rescale weights"
-        )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    # the frontier carries the WHOLE walk so far as an in-row array
-    # (r18): one posexplode at the end replaces the per-step union of
-    # (walk_id, step, node) slices, and — because each step's only
-    # consumer is the next step — the per-step eager localCheckpoint
-    # barrier goes away entirely: the whole walk is ONE pipelined DAG
-    # of key-equi joins against the checkpointed adj (broadcast under
-    # AQE when small). Step 1 is fused into the loop via the
-    # ``prev IS NULL → α = 1`` branch, which reduces EXACTLY to the
-    # first-order formula (uniform pick unweighted; the raw-edge-weight
-    # interval pick weighted) — walks stay bit-identical (pinned by the
-    # cross-engine parity tests and the random_walks-reduction test).
-    # A finished walk (dangling node, or total weight 0 — the
-    # non-backtracking stop) sets node to NULL: the next left join
-    # misses, α/cumw stay NULL, and the row rides through with its
-    # path intact. ``checkpoint_every`` bounds lineage for long walks.
-    # Spread over defaultParallelism up front (r19, the random_walks
-    # note): AQE coalesces the tiny node-set exchange to one partition,
-    # serializing the per-row O(cap²) biased-pick work onto one task.
-    frontier = nodes.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism
-    ).select(
-        F.col("node").alias("walk_id"),
-        F.lit(None).cast("long").alias("prev"),
-        "node",
-        F.lit(None).cast("array<long>").alias("nbrs_prev"),
-        F.array("node").alias("path"),
-    )
-    # per-neighbor α (× edge weight) transition weights, dst-sorted
-    # like nbrs; inclusive prefix sums via the bounded O(cap²)
-    # in-array aggregate. prev IS NULL (step 1 / first-order) → α = 1.
-    alpha = (
-        f"CASE WHEN prev IS NULL THEN 1"
-        f" WHEN x = prev THEN {int(return_w)}"
-        f" WHEN array_contains(nbrs_prev, x) THEN {int(common_w)}"
-        f" ELSE {int(far_w)} END"
-    )
-    if weight_col is None:
-        wts = F.expr(f"transform(nbrs, x -> cast({alpha} AS bigint))")
-    else:
-        wts = F.expr(
-            f"transform(nbrs, (x, i) -> cast({alpha} AS bigint)"
-            f" * element_at(ews, i + 1))"
-        )
-    for i in range(1, walk_len + 1):
-        pick = hash32(
-            F.concat_ws(
-                "\x1f",
-                F.lit(seed),
-                F.col("walk_id").cast("string"),
-                F.lit(str(i)),
-            )
-        )
-        step_df = (
-            frontier.join(adj, "node", "left")
-            .withColumn("__wts", wts)
-            .withColumn(
-                "__cumw",
-                F.expr(
-                    "transform(__wts, (x, i) -> aggregate("
-                    " slice(__wts, 1, i + 1), cast(0 as bigint),"
-                    " (acc, y) -> acc + y))"
-                ),
-            )
-        )
-        # NULL cumw (finished / dangling) and 0 total (weight-0 stop)
-        # both fall to the otherwise-NULL branch; CASE short-circuits,
-        # so the ANSI-mode ``% 0`` path is never evaluated
-        alive = F.element_at("__cumw", -1) > 0
-        r = pick % F.element_at("__cumw", -1)
-        nxt = F.when(
-            alive,
-            F.element_at(
-                "nbrs",
-                (F.size(F.filter("__cumw", lambda c: c <= r)) + 1).cast(
-                    "int"
-                ),
-            ),
-        )
-        frontier = step_df.select(
-            "walk_id",
-            F.when(alive, F.col("node")).alias("prev"),
-            nxt.alias("node"),
-            F.when(alive, F.col("nbrs")).alias("nbrs_prev"),
-            F.when(alive, F.concat("path", F.array(nxt)))
-            .otherwise(F.col("path"))
-            .alias("path"),
-        )
-        if i % checkpoint_every == 0 and i < walk_len:
-            frontier = frontier.localCheckpoint(eager=True)
-    # ONE materialization barrier for the whole walk (the per-step
-    # checkpoints of r15-r17 are gone): downstream consumers (cooc →
-    # PPMI → embedding re-scans the corpus several times) read the
-    # pinned frontier instead of re-running the join chain
-    return frontier.localCheckpoint(eager=True).select(
-        "walk_id", F.posexplode("path").alias("step", "node")
-    )
-
-
 def node2vec_walks_sql(
     edges_sql: str,
     walk_len: int = 4,
@@ -1664,12 +1407,16 @@ def node2vec_walks_sql(
     max_degree: int | None = None,
     weighted: bool = False,
 ) -> str:
-    """Standalone SQL mirror of :func:`node2vec_walks` (DuckDB) — same
-    md5 step hash, same sorted adjacency and sorted-prefix cap, same
-    integer α weights, cumulative-interval pick, and W = 0 stop; one
-    CTE per step, ending in a ``walks`` CTE. ``weighted=True`` expects
-    ``edges_sql`` to produce (src, dst, w) and replays the α·w
-    transition weights with the raw-weight interval at step 1."""
+    """Standalone SQL mirror of :func:`random_walks`' second-order
+    (node2vec) walk (DuckDB) — same md5 step hash, same sorted
+    adjacency and sorted-prefix cap, same integer α weights,
+    cumulative-interval pick, and W = 0 stop; one CTE per step, ending
+    in a ``walks`` CTE. ``weighted=True`` expects ``edges_sql`` to
+    produce (src, dst, w) and replays the α·w transition weights with
+    the raw-weight interval at step 1. Written independently of
+    :func:`random_walks_sql` (it carries prev and joins prev's
+    adjacency every step), so at α = (1, 1, 1) the two mirrors are two
+    separate references for the same first-order walk."""
     if walk_len < 1:
         raise ValueError(f"walk_len must be >= 1, got {walk_len}")
     ws = (return_w, common_w, far_w)

@@ -16,7 +16,8 @@ engine's existing similarity operators (operators/similarity.py cosine
 top-k / ANN / near-dup) consume directly. The reference has no graph
 surface — this is an engine-native scale extension (SURVEY §7), the
 completion of the walk corpus that operators/graph.py::random_walks
-already generates.
+already generates (first-order DeepWalk walks, or node2vec-biased ones
+through its return_w/common_w/far_w keywords).
 
 Spark-first design:
 
@@ -69,9 +70,9 @@ def walk_cooccurrence(
     """Skip-gram co-occurrence counts over a walk corpus: for every walk
     and every ordered position pair (i, j) with ``0 < |i - j| <=
     window``, count (node_i → node_j). Input is the (walk_id, step,
-    node) frame :func:`operators.graph.random_walks` emits (steps are
-    contiguous from 0; shorter dangling-stopped walks just contribute
-    fewer pairs). A node revisited by a walk co-occurs with itself —
+    node) frame :func:`operators.graph.random_walks` emits, first-order
+    or node2vec-biased (steps are contiguous from 0; shorter stopped
+    walks just contribute fewer pairs). A node revisited by a walk co-occurs with itself —
     positional semantics, the standard skip-gram convention.
 
     Output: (src, ctx, cnt) with both directions present (the position
@@ -109,8 +110,8 @@ def walk_cooccurrence(
 def walk_cooccurrence_sql(window: int = 2, walks: str = "walks") -> str:
     """CTE-chain SQL mirror of :func:`walk_cooccurrence` (DuckDB),
     ending in a ``cooc`` CTE. Expects a ``walks`` CTE with (walk_id,
-    step, node) — :func:`operators.graph.random_walks_sql` produces
-    one. The mirror pairs by STEP with a self-join (value-identical to
+    step, node) — :func:`operators.graph.random_walks_sql` and
+    :func:`operators.graph.node2vec_walks_sql` each produce one. The mirror pairs by STEP with a self-join (value-identical to
     the in-array positional generation: steps are contiguous from 0)."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")

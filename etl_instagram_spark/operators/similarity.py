@@ -373,11 +373,6 @@ def ivf_cell(vec_col: str, centroids: list[list[float]]) -> Column:
     )
 
 
-# historical private name; ingest-time cell stamping is a public surface
-# (mirrors lsh_bucket for the LSH family)
-_assign_cell = ivf_cell
-
-
 def ann_ivf_topk(
     df: DataFrame,
     query_vec: list[float],

@@ -447,12 +447,12 @@ def _graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_random_walks convention)."""
     from etl_instagram_spark.operators.graph import (
         bipartite_order_edges,
-        node2vec_walks,
+        random_walks,
     )
 
     od = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    walks = node2vec_walks(
+    walks = random_walks(
         bipartite_order_edges(od, li),
         walk_len=4,
         seed="n2v",
@@ -561,7 +561,7 @@ def _graph_node2vec_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r18 promotion runway so the registration move is mechanical."""
     from etl_instagram_spark.operators.graph import (
         bipartite_order_edges,
-        node2vec_walks,
+        random_walks,
     )
     from etl_instagram_spark.operators.graph_embed import (
         ppmi_scores,
@@ -571,7 +571,7 @@ def _graph_node2vec_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     od = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    walks = node2vec_walks(
+    walks = random_walks(
         bipartite_order_edges(od, li),
         walk_len=4,
         seed="n2e",

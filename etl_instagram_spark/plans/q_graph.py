@@ -257,7 +257,7 @@ def graph_node2vec_embeddings_97q1(
     one 1-row broadcast; the projection is one (node, d) hash agg."""
     from etl_instagram_spark.operators.graph import (
         bipartite_order_edges,
-        node2vec_walks,
+        random_walks,
     )
     from etl_instagram_spark.operators.graph_embed import (
         ppmi_scores,
@@ -270,7 +270,7 @@ def graph_node2vec_embeddings_97q1(
         & (F.col("o_orderdate") < F.lit("1997-04-01"))
     )
     li = _t(spark, sf_dir, "lineitem")
-    walks = node2vec_walks(
+    walks = random_walks(
         bipartite_order_edges(od, li),
         walk_len=4,
         seed="n2q",

@@ -1127,14 +1127,14 @@ def _n2v_df(spark, edges=None):
 )
 def test_node2vec_cross_engine_across_weight_configs(spark, weights):
     from etl_instagram_spark.operators.graph import (
-        node2vec_walks,
+        random_walks,
         node2vec_walks_sql,
     )
 
     rw, cw, fw = weights
     got = sorted(
         tuple(r)
-        for r in node2vec_walks(
+        for r in random_walks(
             _n2v_df(spark), walk_len=5, seed="nv",
             return_w=rw, common_w=cw, far_w=fw,
         ).collect()
@@ -1165,9 +1165,9 @@ def test_node2vec_pure_return_oscillates_exactly(spark):
     start ↔ first-hop deterministically — even steps revisit the step-0
     node, odd steps the step-1 node. An exact semantic pin of the
     second-order bias (no probability tolerance needed)."""
-    from etl_instagram_spark.operators.graph import node2vec_walks
+    from etl_instagram_spark.operators.graph import random_walks
 
-    walks = node2vec_walks(
+    walks = random_walks(
         _n2v_df(spark), walk_len=6, seed="osc",
         return_w=1, common_w=0, far_w=0,
     )
@@ -1186,14 +1186,14 @@ def test_node2vec_nonbacktracking_stops_on_path(spark):
     only neighbor is prev with weight 0 → total weight 0 → the walk
     STOPS (the documented dangling-like stop), both engines."""
     from etl_instagram_spark.operators.graph import (
-        node2vec_walks,
+        random_walks,
         node2vec_walks_sql,
     )
 
     e = _n2v_df(spark, [(7, 8), (8, 7)])
     got = sorted(
         tuple(r)
-        for r in node2vec_walks(e, walk_len=4, seed="nv", return_w=0).collect()
+        for r in random_walks(e, walk_len=4, seed="nv", return_w=0).collect()
     )
     assert got == [(7, 0, 7), (7, 1, 8), (8, 0, 8), (8, 1, 7)]
     want = sorted(
@@ -1214,13 +1214,13 @@ def test_node2vec_nonbacktracking_stops_on_path(spark):
 
 def test_node2vec_capped_parity_and_validation(spark):
     from etl_instagram_spark.operators.graph import (
-        node2vec_walks,
+        random_walks,
         node2vec_walks_sql,
     )
 
     got = sorted(
         tuple(r)
-        for r in node2vec_walks(
+        for r in random_walks(
             _n2v_df(spark), walk_len=4, seed="cap", far_w=3, max_degree=2
         ).collect()
     )
@@ -1241,11 +1241,11 @@ def test_node2vec_capped_parity_and_validation(spark):
     )
     assert got == want
     with pytest.raises(ValueError, match="non-negative"):
-        node2vec_walks(_n2v_df(spark), return_w=-1)
+        random_walks(_n2v_df(spark), return_w=-1)
     with pytest.raises(ValueError, match="all be zero"):
-        node2vec_walks(_n2v_df(spark), return_w=0, common_w=0, far_w=0)
+        random_walks(_n2v_df(spark), return_w=0, common_w=0, far_w=0)
     with pytest.raises(ValueError, match="walk_len"):
-        node2vec_walks(_n2v_df(spark), walk_len=0)
+        random_walks(_n2v_df(spark), walk_len=0)
     with pytest.raises(ValueError, match="non-negative"):
         node2vec_walks_sql("SELECT 1, 2", far_w=-2)
 
@@ -1254,14 +1254,14 @@ def test_node2vec_composes_with_embedding_chain(spark):
     """The (walk_id, step, node) schema is random_walks-compatible, so
     the co-occurrence → PPMI → projection chain runs unchanged on a
     biased corpus."""
-    from etl_instagram_spark.operators.graph import node2vec_walks
+    from etl_instagram_spark.operators.graph import random_walks
     from etl_instagram_spark.operators.graph_embed import (
         ppmi_scores,
         walk_cooccurrence,
         walk_embeddings,
     )
 
-    walks = node2vec_walks(_n2v_df(spark), walk_len=4, seed="cmp", far_w=2)
+    walks = random_walks(_n2v_df(spark), walk_len=4, seed="cmp", far_w=2)
     emb = walk_embeddings(
         ppmi_scores(walk_cooccurrence(walks, window=2)), dim=8, seed="e"
     ).collect()
@@ -1281,14 +1281,14 @@ def test_node2vec_weighted_cross_engine(spark):
     paper's full formulation) replays bit-for-bit in DuckDB, hub cap
     engaged."""
     from etl_instagram_spark.operators.graph import (
-        node2vec_walks,
+        random_walks,
         node2vec_walks_sql,
     )
 
     e = spark.createDataFrame(N2V_WEDGES, "src long, dst long, w long")
     got = sorted(
         tuple(r)
-        for r in node2vec_walks(
+        for r in random_walks(
             e, walk_len=5, seed="wv", far_w=3, weight_col="w", max_degree=8
         ).collect()
     )
@@ -1313,42 +1313,63 @@ def test_node2vec_weighted_cross_engine(spark):
 
 
 def test_node2vec_uniform_alpha_reduces_to_weighted_random_walks(spark):
-    """α = (1, 1, 1) on a weighted graph: every transition weight is
-    exactly the edge weight, the step hash domain is shared, so
-    node2vec_walks reduces BIT-IDENTICALLY to
-    random_walks(weight_col=...) at the same seed — the weighted twin
-    of random_walks' own w=1 ≡ unweighted reduction."""
+    """α = (1, 1, 1) is the first-order walk: every second-order
+    transition weight is exactly the edge weight (1 unweighted) and the
+    step hash domain is shared, so the kernel's output — weighted and
+    unweighted — equals BOTH independent DuckDB references at the same
+    seed: random_walks_sql (first-order) and node2vec_walks_sql at
+    α = (1, 1, 1) (second-order, prev's adjacency joined every step)."""
     from etl_instagram_spark.operators.graph import (
-        node2vec_walks,
+        node2vec_walks_sql,
         random_walks,
+        random_walks_sql,
     )
 
     e = spark.createDataFrame(N2V_WEDGES, "src long, dst long, w long")
-    a = sorted(
-        tuple(r)
-        for r in node2vec_walks(e, walk_len=5, seed="rr", weight_col="w").collect()
+    es = (
+        "SELECT * FROM (VALUES "
+        + ",".join(f"({a},{b},{w})" for a, b, w in N2V_WEDGES)
+        + ") t(src, dst, w)"
     )
-    b = sorted(
-        tuple(r)
-        for r in random_walks(e, walk_len=5, seed="rr", weight_col="w").collect()
-    )
-    assert a == b
-    assert len(a) > 0
+    for weighted in (True, False):
+        got = sorted(
+            tuple(r)
+            for r in random_walks(
+                e if weighted else e.select("src", "dst"),
+                walk_len=5,
+                seed="rr",
+                weight_col="w" if weighted else None,
+            ).collect()
+        )
+        assert len(got) > 0
+        for ctes in (
+            random_walks_sql(es, walk_len=5, seed="rr", weighted=weighted),
+            node2vec_walks_sql(
+                es, walk_len=5, seed="rr",
+                return_w=1, common_w=1, far_w=1, weighted=weighted,
+            ),
+        ):
+            want = sorted(
+                duckdb.sql(
+                    "WITH " + ctes + " SELECT walk_id, step, node FROM walks"
+                ).fetchall()
+            )
+            assert got == want, weighted
 
 
 def test_node2vec_weighted_validation(spark):
-    from etl_instagram_spark.operators.graph import node2vec_walks
+    from etl_instagram_spark.operators.graph import random_walks
 
     bad_null = spark.createDataFrame(
         [(1, 2, 5), (2, 1, None)], "src long, dst long, w long"
     )
     with pytest.raises(ValueError, match="NULL"):
-        node2vec_walks(bad_null, weight_col="w")
+        random_walks(bad_null, weight_col="w")
     bad_neg = spark.createDataFrame(
         [(1, 2, 5), (2, 1, -1)], "src long, dst long, w long"
     )
     with pytest.raises(ValueError, match="positive"):
-        node2vec_walks(bad_neg, weight_col="w")
+        random_walks(bad_neg, weight_col="w")
 
 
 def test_lpa_weighted_votes_and_cross_engine(spark):
@@ -1430,13 +1451,15 @@ def test_lpa_weighted_validation(spark):
         label_propagation(bad_neg, weight_col="w")
 
 
-def test_walk_pipeline_runs_at_default_parallelism(spark):
+@pytest.mark.parametrize("far_w", [1, 2])
+def test_walk_pipeline_runs_at_default_parallelism(spark, far_w):
     """r19/r20 (VERDICT r19 #4 task-count pin): the walk frontier is
     round-robined over defaultParallelism before the step loop — without
     it AQE coalesced the tiny node-set exchange to ONE partition and the
     per-row O(cap²) in-array walk work ran single-task. The adjacency
     side broadcasts, so the spread survives every step: the job that
-    materializes the walk corpus must run >= defaultParallelism tasks."""
+    materializes the walk corpus must run >= defaultParallelism tasks.
+    far_w = 2 pins the same spread for the second-order (biased) walk."""
     from etl_instagram_spark.operators.graph import random_walks
 
     par = spark.sparkContext.defaultParallelism
@@ -1451,7 +1474,8 @@ def test_walk_pipeline_runs_at_default_parallelism(spark):
         return {jl.apply(i).jobId() for i in range(jl.size())}
 
     before = _job_ids()
-    random_walks(edges, walk_len=3, seed="t")  # eager checkpoint runs here
+    # the eager checkpoint runs here
+    random_walks(edges, walk_len=3, seed="t", far_w=far_w)
     jl = store.jobsList(None)
     new_tasks = [
         jl.apply(i).numTasks()

@@ -8,6 +8,10 @@ order-insensitive value hash (floats canonicalized). Prints one line per
 query and exits non-zero on any mismatch.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
+
+With no query names it checks exactly the gate rows; a name may also be
+a non-gate row (``plans.rotated_queries()``), checked the same way
+against its registered oracle SQL.
 """
 
 from __future__ import annotations
@@ -86,6 +90,7 @@ def main() -> int:
     only = [a for a in sys.argv[1:] if "/" not in a]
 
     import __spark_entry__ as entrymod
+    from etl_instagram_spark.plans import rotated_queries
     from etl_instagram_spark.session import get_spark
 
     spark = get_spark("oracle-check", shuffle_partitions=8)
@@ -93,9 +98,17 @@ def main() -> int:
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = 0
+    queries = dict(entrymod.queries())
+    oracles = dict(entrymod.oracle_sql())
+    for name, (fn, sql) in rotated_queries().items():
+        if name in only:
+            queries[name] = fn
+            if sql is not None:
+                oracles[name] = sql() if callable(sql) else sql
+    unknown = sorted(set(only) - set(queries))
+    for name in unknown:
+        print(f"FAIL  {name}: no such query")
+    failures = len(unknown)
     for name, fn in queries.items():
         if only and name not in only:
             continue

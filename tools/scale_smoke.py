@@ -941,14 +941,15 @@ def run_one_op(op: str, docs_path: str, emb_path: str, mult: int) -> dict:
             "params": {"n_rounds": 4},
         }
     elif op == "node2vec":
-        # second-order biased walks (r15, operators/graph.py): per step
-        # TWO key-equi joins of the O(nodes) frontier (cur + prev
-        # adjacency) with in-array O(cap²) weight/prefix work. Disjoint
+        # second-order biased walks (random_walks with far_w=2): per
+        # step one key-equi join of the O(nodes) frontier (prev's
+        # adjacency rides in the frontier row) with in-array O(cap²)
+        # weight/prefix work. Disjoint
         # id-shifted copies replicate per-copy structure — the honest
         # expectation is time ∝ mult.
         from etl_instagram_spark.operators.graph import (
             copurchase_edges,
-            node2vec_walks,
+            random_walks,
         )
 
         li = spark.read.parquet(f"{BASE_SF}/lineitem.parquet")
@@ -956,7 +957,7 @@ def run_one_op(op: str, docs_path: str, emb_path: str, mult: int) -> dict:
 
         sec, mt = max_job_tasks(
             spark,
-            lambda: node2vec_walks(
+            lambda: random_walks(
                 edges, walk_len=4, seed="sm", far_w=2, max_degree=16
             ).count(),
         )
