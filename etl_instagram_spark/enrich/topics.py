@@ -82,18 +82,31 @@ def _strip_first_apostrophe(t: Column) -> Column:
 _STOP_LITS: dict[tuple, list[Column]] = {}
 
 
-def _stop_literals(langs: tuple[str, ...]) -> list[Column]:
+def _per_context(cache: dict, key: tuple, build):
+    """``cache[(live context, *key)]``, calling ``build()`` on a miss.
+    A miss first drops the entries of every other context (their JVM
+    refs are dead). With no live context nothing is cached or evicted:
+    ``build()`` runs as is (a Column build then raises)."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
-    ctx_key = (sc.applicationId, sc.startTime) if sc is not None else None
-    key = (ctx_key, langs)
-    if key not in _STOP_LITS:
-        # literals bound to any other (dead) context are useless; drop them
-        for stale in [k for k in _STOP_LITS if k[0] != ctx_key]:
-            del _STOP_LITS[stale]
-        _STOP_LITS[key] = [F.lit(s) for s in stopwords.combined(langs)]
-    return _STOP_LITS[key]
+    if sc is None:
+        return build()
+    ctx_key = (sc.applicationId, sc.startTime)
+    hit = cache.get((ctx_key, *key))
+    if hit is None:
+        for stale in [k for k in cache if k[0] != ctx_key]:
+            del cache[stale]
+        hit = cache[(ctx_key, *key)] = build()
+    return hit
+
+
+def _stop_literals(langs: tuple[str, ...]) -> list[Column]:
+    return _per_context(
+        _STOP_LITS,
+        (langs,),
+        lambda: [F.lit(s) for s in stopwords.combined(langs)],
+    )
 
 
 def drop_stop_tokens(
@@ -239,15 +252,9 @@ _PIPE_COLS: dict[tuple, dict[str, Column]] = {}
 def _pipeline_cols(
     langs: tuple[str, ...], k: int, min_pct: float, stem: bool
 ) -> dict[str, Column]:
-    from pyspark import SparkContext
-
     langs = tuple(langs)  # callers may pass a list; the key must hash
-    sc = SparkContext._active_spark_context
-    ctx_key = (sc.applicationId, sc.startTime) if sc is not None else None
-    key = (ctx_key, langs, k, min_pct, stem)
-    if key not in _PIPE_COLS:
-        for stale in [kk for kk in _PIPE_COLS if kk[0] != ctx_key]:
-            del _PIPE_COLS[stale]
+
+    def build() -> dict[str, Column]:
         text_col = assemble_document(
             F.col("caption"),
             F.col("accessibility"),
@@ -263,8 +270,9 @@ def _pipeline_cols(
             cols["__raw"] = normalized_tokens(text_col)
             cols["terms"] = drop_stop_tokens(F.col("__raw"), langs)
         cols["top"] = top_terms_col(F.col("__terms"), k, min_pct)
-        _PIPE_COLS[key] = cols
-    return _PIPE_COLS[key]
+        return cols
+
+    return _per_context(_PIPE_COLS, (langs, k, min_pct, stem), build)
 
 
 def attach_topics(

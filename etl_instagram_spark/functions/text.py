@@ -111,16 +111,40 @@ def affine_hash(x: Column, a: int, b: int, p: int = HASH_PRIME) -> Column:
     return (F.lit(a) * (x % F.lit(p)) + F.lit(b)) % F.lit(p)
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as array<string>; a single whole-text shingle
-    when the text has fewer than n tokens (so every doc has ≥1 shingle)."""
-    t = tokens(col)
-    return F.when(F.size(t) < n, F.array(F.trim(F.lower(col)))).otherwise(
+def _shingle_rule(text: Column, n: int, bind=lambda name, c: c) -> Column:
+    """THE word n-gram shingle rule: trim + lower, split on ``\\s+``,
+    every run of n consecutive tokens space-joined — or the whole
+    normalized text as one shingle when it has fewer than n tokens (so
+    every doc has ≥1 shingle). ``bind(name, column)`` lets a DataFrame
+    caller stage the normalized text and the tokens as columns, so each
+    is computed once per row instead of once per shingle element."""
+    norm = bind("__sh_norm", F.trim(F.lower(text)))
+    toks = bind("__sh_toks", F.split(norm, r"\s+"))
+    return F.when(F.size(toks) < n, F.array(norm)).otherwise(
         F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.array_join(F.slice(t, i, n), " "),
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
         )
     )
+
+
+def _with_shingle_rule(df, text_col: str, out_col: str, n: int):
+    """``df`` plus ``out_col``: :func:`_shingle_rule` over ``text_col``
+    with its normalized text and tokens staged as columns (dropped
+    after)."""
+
+    def bind(name: str, c: Column) -> Column:
+        nonlocal df
+        df = df.withColumn(name, c)
+        return F.col(name)
+
+    shingles = _shingle_rule(F.col(text_col), n, bind)
+    return df.withColumn(out_col, shingles).drop("__sh_norm", "__sh_toks")
+
+
+def word_shingles(col: Column, n: int = 3) -> Column:
+    """Word n-gram shingles as array<string> (:func:`_shingle_rule`)."""
+    return _shingle_rule(col, n)
 
 
 def char_shingles(col: Column, width: int = 8) -> Column:
@@ -311,20 +335,9 @@ def with_minhash_signature(
     shingle set (the incremental near-dedup verify) tokenize once per
     row instead of twice.
     """
-    norm = F.trim(F.lower(F.col(text_col)))
-    df = df.withColumn("__mh_norm", norm)
-    df = df.withColumn("__mh_toks", F.split(F.col("__mh_norm"), r"\s+"))
-    t = F.col("__mh_toks")
-    shingles = F.when(F.size(t) < shingle_words, F.array(F.col("__mh_norm"))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (shingle_words - 1)),
-            lambda i: F.array_join(F.slice(t, i, shingle_words), " "),
-        )
-    )
-    if shingles_col is not None:
-        df = df.withColumn(shingles_col, shingles)
-        shingles = F.col(shingles_col)
-    df = df.withColumn("__mh_base", F.transform(shingles, hash32))
+    sh = shingles_col or "__mh_sh"
+    df = _with_shingle_rule(df, text_col, sh, shingle_words)
+    df = df.withColumn("__mh_base", F.transform(F.col(sh), hash32))
     base = F.col("__mh_base")
 
     def perm(a: int, b: int):
@@ -333,10 +346,10 @@ def with_minhash_signature(
     sig = F.array(
         *[F.array_min(F.transform(base, perm(a, b))) for a, b in minhash_coefficients(k)]
     )
-    df = df.withColumn(out_col, sig).drop("__mh_norm", "__mh_toks", "__mh_base")
-    if shingles_col is not None:
-        df = df.withColumn(shingles_col, F.array_distinct(F.col(shingles_col)))
-    return df
+    df = df.withColumn(out_col, sig).drop("__mh_base")
+    if shingles_col is None:
+        return df.drop(sh)
+    return df.withColumn(shingles_col, F.array_distinct(F.col(shingles_col)))
 
 
 def with_word_shingles(
@@ -349,16 +362,7 @@ def with_word_shingles(
     """DataFrame-level word shingles, staged like with_minhash_signature
     so tokenization happens once per row (the expression form re-splits
     per shingle element — O(tokens²) per row)."""
-    df = df.withColumn("__ws_norm", F.trim(F.lower(F.col(text_col))))
-    df = df.withColumn("__ws_toks", F.split(F.col("__ws_norm"), r"\s+"))
-    t = F.col("__ws_toks")
-    sh = F.when(F.size(t) < n, F.array(F.col("__ws_norm"))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.array_join(F.slice(t, i, n), " "),
-        )
-    )
+    df = _with_shingle_rule(df, text_col, out_col, n)
     if distinct:
-        sh = F.array_distinct(sh)
-    return df.withColumn(out_col, sh).drop("__ws_norm", "__ws_toks")
-
+        df = df.withColumn(out_col, F.array_distinct(F.col(out_col)))
+    return df

@@ -1086,48 +1086,28 @@ def flag_contaminated_fuzzy(
     paraphrased or re-punctuated into the crawl; public training
     reports run both rules).
 
-    Same scale shape as the dedup family's delta-vs-history path
-    (dedup.incremental_near_dedup): both sides get MinHash band hashes,
-    candidates come from a band-hash EQUI-join (corpus × benchmark —
+    The dedup family's MinHash kernel (operators/dedup.py): both sides
+    are staged once (signature, band hashes, distinct shingle set),
+    candidates come from the band-hash EQUI-join (corpus × benchmark —
     never all pairs), and the exact Jaccard verify runs only on
-    candidates. The benchmark side is eval-set sized; Spark broadcasts
-    it under AQE. Adds ``fuzzy_contaminated`` and ``max_eval_jaccard``
+    candidates, over the staged shingle sets. The benchmark side is
+    eval-set sized; Spark broadcasts it under AQE. Adds ``fuzzy_contaminated`` and ``max_eval_jaccard``
     (the best-matching eval similarity, 0.0 when no candidate)."""
-    from etl_instagram_spark.functions import text as T
-    from etl_instagram_spark.operators.dedup import _band_hashes, shingle_jaccard
+    from etl_instagram_spark.operators.dedup import _band_join, _jaccard, _stage_minhash
 
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    bench_text = bench_text_col or text_col
 
-    def banded(df: DataFrame, idc: str, txt: str, side: str) -> DataFrame:
-        staged = T.with_minhash_signature(df, txt, "__sig", k, shingle_words)
-        return staged.select(
-            F.col(idc).alias(f"{side}_id"),
-            F.col(txt).alias(f"{side}_text"),
-            F.posexplode(_band_hashes(F.col("__sig"), k, bands)).alias(
-                "band_idx", "band_hash"
-            ),
-        )
-    c = banded(docs, id_col, text_col, "doc")
-    e = banded(
-        benchmark.select(
-            F.monotonically_increasing_id().alias("__eid"), F.col(bench_text)
-        ),
-        "__eid",
-        bench_text,
-        "eval",
+    c = _stage_minhash(docs, text_col, k, bands, shingle_words).select(
+        F.col(id_col).alias("doc_id"), F.col("__sh").alias("doc_sh"), "__bh"
     )
+    e = _stage_minhash(
+        benchmark, bench_text_col or text_col, k, bands, shingle_words
+    ).select(F.col("__sh").alias("eval_sh"), "__bh")
     hits = (
-        c.join(e, ["band_idx", "band_hash"])
-        .select("doc_id", "doc_text", "eval_text")
+        _band_join(c, e)
         .distinct()
-        .select(
-            "doc_id",
-            shingle_jaccard(
-                F.col("doc_text"), F.col("eval_text"), shingle_words
-            ).alias("__j"),
-        )
+        .select("doc_id", _jaccard(F.col("doc_sh"), F.col("eval_sh")).alias("__j"))
         .groupBy("doc_id")
         .agg(F.round(F.max("__j"), 6).alias("max_eval_jaccard"))
     )

@@ -9,10 +9,14 @@ ops — no UDFs — so they stay inside whole-stage codegen.
 Scale design (100 TB):
 - ``exact_dedup``: one shuffle on a 32-byte md5 key; skewed dup clusters
   are handled by AQE skew-join/partition coalescing.
-- ``minhash_lsh_candidates``: per-row signature (scan-stage projection),
-  then a self-equi-join on (band, band_hash) — candidate volume is
-  O(Σ bucket²), never O(n²). Tune k/bands to the target Jaccard threshold
-  via the standard (1/b)^(1/r) S-curve.
+- One MinHash kernel serves every MinHash face — batch, incremental
+  (``incremental_near_dedup``) and fuzzy decontamination
+  (cleanup.flag_contaminated_fuzzy): ``_stage_minhash`` (signature, band
+  hashes and distinct shingle set from one tokenization, a scan-stage
+  projection), ``_band_join`` (equi-join on (band, band_hash) —
+  candidate volume is O(Σ bucket²), never O(n²)) and ``_jaccard`` (exact
+  verify on the staged sets). Tune k/bands to the target Jaccard
+  threshold via the standard (1/b)^(1/r) S-curve.
 - ``near_dedup_minhash``: candidates → exact shingle-Jaccard verify →
   keep-smallest-id survivor choice. The verify join only touches candidate
   pairs. Survivor semantics are single-pass (a doc is dropped iff some
@@ -87,12 +91,6 @@ def exact_dedup(
     )
 
 
-def minhash_signature(df: DataFrame, text_col: str, k: int = 16, shingle_words: int = 3) -> DataFrame:
-    """Attach a ``minhash_sig`` array<long> column (per-row projection,
-    staged so tokenize/shingle/md5 each run once per row)."""
-    return T.with_minhash_signature(df, text_col, "minhash_sig", k, shingle_words)
-
-
 # For rows-per-band ≤ 2 the band hash is the exact (injective) base-2^31
 # digit pack: sig values are < HASH_PRIME < 2^31, so hi*2^31 + lo < 2^62
 # fits int64 with zero collisions. For rows > 2 that pack overflows int64
@@ -133,6 +131,85 @@ def band_hash_sql(sig_expr: str, k: int, bands: int) -> str:
     return "[" + ", ".join(exprs) + "]"
 
 
+# ---------------------------------------------------------------------------
+# the MinHash near-duplicate kernel: stage → band join → exact verify. Every
+# MinHash face (batch, incremental, fuzzy decontamination) composes these.
+# ---------------------------------------------------------------------------
+
+
+def _stage_minhash(
+    df: DataFrame,
+    text_col: str,
+    k: int,
+    bands: int,
+    shingle_words: int,
+    id_col: str | None = None,
+) -> DataFrame:
+    """``df`` plus ``__sig`` (the k-slot MinHash signature), ``__sh`` (the
+    DISTINCT word-shingle set) and ``__bh`` (the band hashes), all from
+    one tokenization per row. With ``id_col``, ``df`` is first cut to
+    (``__id``, text) — the batch faces' shape."""
+    if id_col is not None:
+        df = df.select(F.col(id_col).alias("__id"), F.col(text_col))
+    return T.with_minhash_signature(
+        df, text_col, "__sig", k, shingle_words, shingles_col="__sh"
+    ).withColumn("__bh", _band_hashes(F.col("__sig"), k, bands))
+
+
+def _band_join(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
+    """LSH candidates: each side's ``__bh`` posexplodes to (band_idx,
+    band_hash) and the sides EQUI-join on it — O(Σ bucket²), never all
+    pairs. Two frames carry every other column of both (names must not
+    clash), one row per shared band. One frame with ``__id`` is the
+    self-join: distinct (id_a, id_b) with id_a < id_b."""
+
+    def banded(df: DataFrame) -> DataFrame:
+        carried = [c for c in df.columns if c != "__bh"]
+        return df.select(*carried, F.posexplode("__bh").alias("band_idx", "band_hash"))
+
+    if b is not None:
+        return (
+            banded(a)
+            .join(banded(b), ["band_idx", "band_hash"])
+            .drop("band_idx", "band_hash")
+        )
+    one = banded(a.select("__id", "__bh"))
+    return (
+        one.alias("a")
+        .join(
+            one.alias("b"),
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.__id") < F.col("b.__id")),
+        )
+        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two DISTINCT shingle sets: |A∩B| / (|A|+|B|−|A∩B|)
+    (no array_union allocation just to take a size); 0.0 for an empty
+    union."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(a) + F.size(b) - inter
+    return F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union)
+
+
+def _verified(pairs: DataFrame, staged: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for the ``pairs`` whose exact Jaccard over
+    ``staged``'s (``__id``, ``__sh``) sets reaches ``threshold`` — the
+    verify joins touch candidate pairs only."""
+    sh = staged.select("__id", "__sh")
+    return (
+        pairs.join(sh.toDF("id_a", "__sha"), "id_a")
+        .join(sh.toDF("id_b", "__shb"), "id_b")
+        .withColumn("jaccard", _jaccard(F.col("__sha"), F.col("__shb")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -145,23 +222,7 @@ def minhash_lsh_candidates(
 
     P(candidate) = 1 − (1 − J^(k/bands))^bands for Jaccard J.
     """
-    staged = T.with_minhash_signature(df, text_col, "__sig", k, shingle_words)
-    banded = staged.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(_band_hashes(F.col("__sig"), k, bands)).alias("band_idx", "band_hash"),
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
+    return _band_join(_stage_minhash(df, text_col, k, bands, shingle_words, id_col))
 
 
 def shingle_jaccard(a: Column, b: Column, n: int = 3) -> Column:
@@ -185,24 +246,10 @@ def verified_duplicate_pairs(
     """(id_a, id_b) pairs (id_a < id_b) that are LSH candidates AND pass
     the exact shingle-Jaccard ≥ threshold verify — the shared kernel under
     both survivor-style dedup (``near_dedup_losers``) and cluster
-    extraction (``duplicate_clusters``)."""
-    cands = minhash_lsh_candidates(df, id_col, text_col, k, bands, shingle_words)
-    # stage each doc's distinct shingle set ONCE, then verify on the
-    # materialized arrays — the expression form would re-tokenize both
-    # texts per candidate pair (O(tokens²) per pair)
-    shingled = T.with_word_shingles(
-        df.select(F.col(id_col), F.col(text_col)), text_col, "__sh", shingle_words, distinct=True
-    ).select(F.col(id_col), F.col("__sh"))
-    sh_a = shingled.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sh", "__sha")
-    sh_b = shingled.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sh", "__shb")
-    inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
-    union = F.size(F.array_union(F.col("__sha"), F.col("__shb")))
-    return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .filter(F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union) >= threshold)
-        .select("id_a", "id_b")
-    )
+    extraction (``duplicate_clusters``). Signatures and shingle sets come
+    from one staging pass."""
+    staged = _stage_minhash(df, text_col, k, bands, shingle_words, id_col)
+    return _verified(_band_join(staged), staged, threshold).select("id_a", "id_b")
 
 
 def jaccard_join(
@@ -341,28 +388,7 @@ def jaccard_join(
         .filter(inter_h >= pair_t - 1e-9)
         .select("id_a", "id_b")
     )
-    sh_a = shingled.select(
-        F.col("__id").alias("id_a"),
-        F.col("__sh").alias("__sha"),
-        F.col("__sz").alias("__sza"),
-    )
-    sh_b = shingled.select(
-        F.col("__id").alias("id_b"),
-        F.col("__sh").alias("__shb"),
-        F.col("__sz").alias("__szb"),
-    )
-    # both sides are distinct sets, so |A∪B| = |A|+|B|−|A∩B| — no
-    # array_union allocation just to take a size
-    inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
-    union = F.col("__sza") + F.col("__szb") - inter
-    jac = F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union)
-    return (
-        survivors.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified(survivors, shingled, threshold)
 
 
 def near_dedup_losers(
@@ -905,11 +931,10 @@ def signature_rows(
     """One row per doc for the signature store: (id, sig, band_hashes).
     O(k + bands) bigints per doc — the corpus's dedup history WITHOUT
     retaining any text."""
-    staged = T.with_minhash_signature(df, text_col, "__sig", k, shingle_words)
-    return staged.select(
+    return _stage_minhash(df, text_col, k, bands, shingle_words).select(
         F.col(id_col),
         F.col("__sig").alias("sig"),
-        _band_hashes(F.col("__sig"), k, bands).alias("band_hashes"),
+        F.col("__bh").alias("band_hashes"),
     )
 
 
@@ -972,45 +997,14 @@ def incremental_near_dedup(
     sc = incoming.sparkSession.sparkContext
     if incoming.rdd.getNumPartitions() < max(2, sc.defaultParallelism // 2):
         incoming = incoming.repartition(sc.defaultParallelism)
-    staged = (
-        T.with_minhash_signature(
-            incoming, text_col, "__sig", k, shingle_words, shingles_col="__sh"
-        )
-        .withColumn("__bh", _band_hashes(F.col("__sig"), k, bands))
-        .localCheckpoint(eager=True)
-    )
+    staged = _stage_minhash(incoming, text_col, k, bands, shingle_words)
+    staged = staged.localCheckpoint(eager=True)
     # within-batch near-dedup: the exact near_dedup_minhash semantics
     # (LSH band collisions → exact shingle-Jaccard ≥ threshold → drop
     # the larger id), evaluated over the staged columns
-    banded = staged.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode("__bh").alias("band_idx", "band_hash"),
-    )
-    cands = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
-    )
-    sh = staged.select(F.col(id_col).alias("__sid"), "__sh")
-    inter = F.size(F.array_intersect(F.col("__sha"), F.col("__shb")))
-    union = F.size(F.array_union(F.col("__sha"), F.col("__shb")))
+    batch = staged.select(F.col(id_col).alias("__id"), "__bh", "__sh")
     losers = (
-        cands.join(
-            sh.select(F.col("__sid").alias("id_a"), F.col("__sh").alias("__sha")), "id_a"
-        )
-        .join(
-            sh.select(F.col("__sid").alias("id_b"), F.col("__sh").alias("__shb")), "id_b"
-        )
-        .filter(
-            F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union)
-            >= threshold
-        )
+        _verified(_band_join(batch), batch, threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
@@ -1026,15 +1020,15 @@ def incremental_near_dedup(
                 f"store was built with k={shape['k']}, bands={shape['b']}; "
                 f"called with k={k}, bands={bands} — signatures are not comparable"
             )
-        hist_bands = hist.select(
+        hist_sigs = hist.select(
             F.col(id_col).alias("__old_id"),
             F.col("sig").alias("__old_sig"),
-            F.posexplode("band_hashes").alias("__bidx", "__bhash"),
+            F.col("band_hashes").alias("__bh"),
         )
-        new_bands = survivors.select(
+        new_sigs = survivors.select(
             F.col(id_col).alias("__new_id"),
             F.col("__sig").alias("__new_sig"),
-            F.posexplode("__bh").alias("__bidx", "__bhash"),
+            "__bh",
         )
         est = (
             F.size(
@@ -1046,7 +1040,7 @@ def incremental_near_dedup(
             / F.lit(k)
         )
         dup_new_ids = (
-            new_bands.join(hist_bands, ["__bidx", "__bhash"])
+            _band_join(new_sigs, hist_sigs)
             .filter(F.col("__new_id") != F.col("__old_id"))
             .select("__new_id", "__new_sig", "__old_sig")
             .distinct()

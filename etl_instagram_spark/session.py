@@ -54,6 +54,8 @@ def get_spark(app_name: str = "etl_instagram_spark", shuffle_partitions: int | N
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # no `[Stage N: ...]\r` redraws interleaved with a tool's stdout
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # managed-table warehouse (bucketed tables); static conf, so set here
         .config(

@@ -602,6 +602,15 @@ def test_fuzzy_decontamination_catches_paraphrase_exact_misses(spark):
     }
     assert fuzzy[0][0] is True and fuzzy[0][1] > 0.4
     assert fuzzy[1] == (False, 0.0)
+    # the verify value is the exact shingle Jaccard of the two texts
+    from etl_instagram_spark.operators.dedup import shingle_jaccard
+
+    want = (
+        spark.createDataFrame([(paraphrased, eval_q)], "a string, b string")
+        .select(F.round(shingle_jaccard(F.col("a"), F.col("b")), 6).alias("j"))
+        .first()["j"]
+    )
+    assert fuzzy[0][1] == want
 
 
 def test_fuzzy_decontamination_threshold_validation(spark):

@@ -233,3 +233,20 @@ def test_attach_topics_default_assembly_accepts_langs_sequence(spark, langs):
     assert out.schema["topics"].dataType.simpleString() == (
         "array<struct<confidence:double,name:string>>"
     )
+
+
+def test_topics_column_cache_survives_a_missing_context(spark, monkeypatch):
+    # a build with no live SparkContext raises, and must not evict the
+    # live context's cached Columns on its way. Builds Columns only — no
+    # Spark job runs.
+    from pyspark import SparkContext
+
+    TP._pipeline_cols(("es",), 7, 2.0, False)
+    live = set(TP._PIPE_COLS) | set(TP._STOP_LITS)
+    assert live
+    sc = SparkContext._active_spark_context
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    with pytest.raises(AssertionError):
+        TP._pipeline_cols(("es",), 7, 2.0, False)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", sc)
+    assert live <= set(TP._PIPE_COLS) | set(TP._STOP_LITS)

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Write .explain('formatted') for every gate query to a directory.
+"""Write .explain('formatted') for queries to a directory.
 
 Usage: python tools/capture_plans.py <outdir> [suffix] [query ...]
-Used for the plans/r19/<query>_before.txt / _after.txt deliverables and
-for load-independent plan audits (Exchange counts, join strategies,
-PushedFilters, BatchEvalPython nodes).
+With no query names it writes every gate row; a name may also be a
+non-gate row (``plans.rotated_queries()``), and an unknown name fails.
+Used for before/after plan pairs and for load-independent plan audits
+(Exchange counts, join strategies, PushedFilters, BatchEvalPython nodes).
 """
 
 from __future__ import annotations
@@ -20,16 +21,22 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main() -> int:
     outdir = sys.argv[1]
     suffix = sys.argv[2] if len(sys.argv) > 2 else "after"
-    only = set(sys.argv[3:])
-    os.makedirs(outdir, exist_ok=True)
+    only = sys.argv[3:]
 
     import __spark_entry__ as entrymod
+    from etl_instagram_spark.plans import rotated_queries
     from etl_instagram_spark.session import get_spark
 
+    queries = dict(entrymod.queries())
+    if only:
+        queries.update((n, fn) for n, (fn, _) in rotated_queries().items())
+        unknown = sorted(set(only) - set(queries))
+        if unknown:
+            raise SystemExit(f"no such query: {', '.join(unknown)}")
+        queries = {name: queries[name] for name in only}
+    os.makedirs(outdir, exist_ok=True)
     spark = get_spark("plans")
-    for name, fn in entrymod.queries().items():
-        if only and name not in only:
-            continue
+    for name, fn in queries.items():
         try:
             df = fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(

@@ -6,7 +6,8 @@ optimization round's per-operator checklist reads (guide §1: measure first;
 label jobs; attribute time to jobs/stages, not guesses).
 
 Usage: python tools/profile_jobs.py <entry> [reps]
-  entry: a queries() name, or one of the tick names
+  entry: a gate query name, a non-gate row name
+         (``plans.rotated_queries()``), or one of the tick names
          (etl_hashtag_tick, stream_dedup_tick, stream_hh_tick,
           ann_query_tick, kmeans_refine_tick)
 """
@@ -59,10 +60,8 @@ def main() -> int:
 
     import bench
     import __spark_entry__ as entrymod
+    from etl_instagram_spark.plans import rotated_queries
     from etl_instagram_spark.session import get_spark
-
-    spark = get_spark("profile")
-    spark.range(1).count()
 
     ticks = {
         "etl_hashtag_tick": bench.etl_tick_seconds,
@@ -71,10 +70,16 @@ def main() -> int:
         "ann_query_tick": bench.ann_query_tick_seconds,
         "kmeans_refine_tick": bench.kmeans_refine_tick_seconds,
     }
+    queries = dict(entrymod.queries())
+    queries.update((n, fn) for n, (fn, _) in rotated_queries().items())
+    if entry not in ticks and entry not in queries:
+        raise SystemExit(f"no such entry: {entry}")
+    spark = get_spark("profile")
+    spark.range(1).count()
     if entry in ticks:
         fn = lambda: ticks[entry](spark)  # noqa: E731
     else:
-        q = entrymod.queries()[entry]
+        q = queries[entry]
         # warm the tables like bench.py does
         from etl_instagram_spark.sources.tables import TABLE_NAMES, load_table
         for t in TABLE_NAMES:
