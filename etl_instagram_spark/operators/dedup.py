@@ -165,7 +165,12 @@ def _band_join(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
 
     def banded(df: DataFrame) -> DataFrame:
         carried = [c for c in df.columns if c != "__bh"]
-        return df.select(*carried, F.posexplode("__bh").alias("band_idx", "band_hash"))
+        # explode an expression, not the bare column: for a generator
+        # over a column Spark infers `size(__bh) > 0` and pushes it below
+        # the staging projections of an unpinned frame, where it re-runs
+        # the whole unstaged MinHash per row (~10x slower candidates)
+        bh = F.transform("__bh", lambda h: h)
+        return df.select(*carried, F.posexplode(bh).alias("band_idx", "band_hash"))
 
     if b is not None:
         return (
